@@ -379,15 +379,19 @@ def test_ann_staleness_lifecycle(spark, fresh_warehouse):
 
 
 def test_delete_removes_ann_sidecars(spark, fresh_warehouse):
+    """delete() removes the data and every index artifact next to it:
+    the LSH table and model, the PQ codes and codebook file."""
     col = EmbeddingCollection.new(
-        spark, [f"t {i}" for i in range(10)], None, None, "sidecars",
+        spark, [f"t {i}" for i in range(40)], None, None, "sidecars",
         embedder=HashEmbedder(dim=16),
     ).save()
     col.build_ann_index()
+    col.build_pq_index(m=4, k=4)
     path = col.catalog.resolve("view-sidecars")["path"]
-    assert os.path.exists(path + "_ann") and os.path.exists(path + "_ann_model")
+    sidecars = [path + x for x in ("_ann", "_ann_model", "_pq", "_pq_books.json")]
+    assert all(os.path.exists(p) for p in sidecars)
     EmbeddingCollection.delete(spark, "view-sidecars")
-    for p in (path, path + "_ann", path + "_ann_model"):
+    for p in [path] + sidecars:
         assert not os.path.exists(p)
 
 
@@ -448,6 +452,31 @@ def test_pq_index_lifecycle(spark, fresh_warehouse):
         col.nearest_query_pq(probe)
     col.build_pq_index(m=4, k=16)
     assert col.nearest_query_pq(probe, k=1).first()["id"] == "id17"
+
+
+def test_stream_append_marks_pq_index_stale(spark, fresh_warehouse, tmp_path):
+    """A stream append writes rows the PQ codes do not hold: like append
+    and upsert it marks the index stale, so the approximate query refuses
+    instead of silently missing the streamed rows."""
+    from valentinus_spark.errors import DatabaseError
+
+    emb = HashEmbedder(dim=32)
+    docs = [f"document about topic number {i} with words {i * 7}" for i in range(40)]
+    col = EmbeddingCollection.new(spark, docs, None, None, "pqstream", embedder=emb).save()
+    col.build_pq_index(m=4, k=8)
+    assert col.nearest_query_pq(docs[3], k=1).first()["id"] == "id3"
+
+    src = str(tmp_path / "stream_in")
+    spark.createDataFrame(
+        [("idS", "a streamed document", None)],
+        "id string, document string, metadata map<string,string>",
+    ).write.parquet(src)
+    stream = spark.readStream.schema("id string, document string, metadata map<string,string>").parquet(src)
+    q = col.stream_append(stream, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert col.catalog.resolve("view-pqstream")["pq_index"] == "stale"
+    with pytest.raises(DatabaseError, match="stale"):
+        col.nearest_query_pq(docs[3])
 
 
 def test_cosine_query_many_matches_single_queries(spark, fresh_warehouse):

@@ -55,11 +55,24 @@ from valentinus_spark.errors import (
     ViewNameError,
 )
 from valentinus_spark.filters import compile_filters
-from valentinus_spark.functions.vector import cosine_similarity, dot, l2_distance
+from valentinus_spark.functions.vector import l2_distance, topk_score, vector_norm
 from valentinus_spark.session import warehouse_dir
 
 # reference view-name gate (embeddings.rs:107-109)
 VALID_NAME = re.compile(r"^[a-zA-Z0-9_]+$")
+
+# index artifacts written next to a collection's data path (path + suffix)
+ANN_SIDECARS = ("_ann", "_ann_model")
+PQ_SIDECARS = ("_pq", "_pq_books.json")
+
+
+def _mark_indexes_stale(entry: dict) -> None:
+    """Rows written after an index build are missing from the persisted
+    LSH table and PQ codes: mark every built index stale so approximate
+    queries refuse until it is rebuilt (every writer calls this)."""
+    for flag in ("ann_index", "pq_index"):
+        if entry.get(flag):
+            entry[flag] = "stale"
 
 
 class CosineQueryResult:
@@ -371,12 +384,7 @@ class EmbeddingCollection:
         writer.parquet(entry["path"])
         self.df = self.spark.read.parquet(entry["path"])
         entry["n_rows"] = self.df.count()
-        if entry.get("ann_index"):
-            # new rows are not in the persisted LSH table — mark it stale so
-            # approximate queries refuse until rebuild_ann_index()
-            entry["ann_index"] = "stale"
-        if entry.get("pq_index"):
-            entry["pq_index"] = "stale"  # codes table misses the new rows
+        _mark_indexes_stale(entry)
         self.catalog.add(self.view, entry)
         return self
 
@@ -450,10 +458,7 @@ class EmbeddingCollection:
         shutil.rmtree(old)
         self.df = self.spark.read.parquet(path)
         entry["n_rows"] = self.df.count()
-        if entry.get("ann_index"):
-            entry["ann_index"] = "stale"
-        if entry.get("pq_index"):
-            entry["pq_index"] = "stale"
+        _mark_indexes_stale(entry)
         self.catalog.add(self.view, entry)
         return self
 
@@ -604,11 +609,11 @@ class EmbeddingCollection:
                 found.append((d, "swap_compaction_dir"))
             elif d.startswith(name + ".compact-"):
                 found.append((d, "staged_compaction_dir"))
-            elif d in (name + "_ann", name + "_ann_model") and not entry.get(
+            elif d in [name + x for x in ANN_SIDECARS] and not entry.get(
                 "ann_index"
             ):
                 found.append((d, "orphan_ann_sidecar"))
-            elif d in (name + "_pq", name + "_pq_books.json") and not entry.get(
+            elif d in [name + x for x in PQ_SIDECARS] and not entry.get(
                 "pq_index"
             ):
                 found.append((d, "orphan_pq_sidecar"))
@@ -670,11 +675,14 @@ class EmbeddingCollection:
         """Drop data + catalog entry (embeddings.rs:419-455)."""
         catalog = catalog or CollectionCatalog(spark)
         entry = catalog.resolve(view_name)  # raises NotFoundError if absent
-        # data + the ANN sidecars build_ann_index wrote next to it —
+        # data + the ANN/PQ sidecars build_*_index wrote next to it —
         # otherwise deleted collections orphan their index artifacts
-        for p in (entry["path"], entry["path"] + "_ann", entry["path"] + "_ann_model"):
-            if os.path.exists(p):
+        path = entry["path"]
+        for p in [path] + [path + x for x in ANN_SIDECARS + PQ_SIDECARS]:
+            if os.path.isdir(p):
                 shutil.rmtree(p)
+            elif os.path.exists(p):
+                os.remove(p)
         catalog.remove(view_name)
 
     # ---------------- accessors (embeddings.rs:457-475) -------------------
@@ -697,12 +705,12 @@ class EmbeddingCollection:
     # ---------------- queries (T4-T7) -------------------------------------
 
     def _vec(self):
-        """Vector expression: the float column, or transparent dequantize
-        of an int8-quantized collection (save(quantize=True))."""
+        """Vector operand: the float column's name, or transparent
+        dequantize of an int8-quantized collection (save(quantize=True))."""
         from valentinus_spark.functions.vector import dequantize_embedding
 
         if "embedding" in self.df.columns:
-            return F.col("embedding")
+            return "embedding"
         if "embedding_q" in self.df.columns:
             return dequantize_embedding("embedding_q")
         raise NotFoundError("collection has no embeddings — save() first")
@@ -719,10 +727,11 @@ class EmbeddingCollection:
         embeddings.rs:334-382).
 
         Plan: filter(metadata predicate) → project(similarity) →
-        filter(sim > 0) → TakeOrdered(k). Catalyst pushes the compiled
-        metadata predicate to the Parquet scan; the similarity expression is
-        whole-stage-codegen'd JVM code; TakeOrderedAndProject does a
-        per-partition top-k then a driver merge — no global sort shuffle.
+        TakeOrdered(k) → filter(similarity not NULL). Catalyst pushes the
+        compiled metadata predicate to the Parquet scan; the similarity is
+        computed once per row, NULL where the dot>0 keep-rule drops the row
+        (``topk_score``); TakeOrderedAndProject does a per-partition top-k
+        then a driver merge — no global sort shuffle.
 
         - ``metric="cosine"`` (default) = true cosine; ``metric="dot"`` =
           reference's raw dot (embeddings.rs:365; SURVEY.md §7.4.2).
@@ -732,24 +741,21 @@ class EmbeddingCollection:
         - ``num_results=0`` → all matches (embeddings.rs:375).
         """
         qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
-        vec = self._vec()
-        sim = dot(vec, qv) if metric == "dot" else cosine_similarity(vec, qv)
-        out = (
-            self.df.filter(
-                compile_filters(f_where, promoted_columns=self.df.columns)
-            )
-            .withColumn("similarity", sim)
-            # dot>0 keep-rule (embeddings.rs:366); the isnan guard restores the
-            # reference's Rust semantics where NaN > 0.0 is FALSE (Spark's
-            # total order would keep NaN AND rank it above +Inf)
-            .filter((F.col("similarity") > 0) & ~F.isnan("similarity"))
-            .select("id", "document", "similarity", "metadata")
+        out = self.df.filter(
+            compile_filters(f_where, promoted_columns=self.df.columns)
+        ).select(
+            "id",
+            "document",
+            topk_score(self._vec(), qv, metric).alias("similarity"),
+            "metadata",
         )
-        if ordered:
+        if not ordered:  # first-k in storage order: keep-rule before the cut
+            out = out.filter("similarity IS NOT NULL")
+        else:  # NULLs sort last, so the top-k holds every kept row first
             out = out.orderBy(F.desc("similarity"), F.asc("id"))
         if num_results > 0:
             out = out.limit(num_results)
-        return out
+        return out.filter("similarity IS NOT NULL") if ordered else out
 
     def cosine_query_many(
         self,
@@ -768,30 +774,24 @@ class EmbeddingCollection:
         ranked per qid."""
         if not query_strings:
             raise ValueError("query_strings must be non-empty")
-        qvs = self.embedder.embed_texts(list(query_strings))
+        qvs = [[float(x) for x in v] for v in self.embedder.embed_texts(list(query_strings))]
+        # each probe's norm is computed here, once, not per row and probe
         queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in qvs[i]]) for i in range(len(qvs))],
-            "qid int, qvec array<double>",
+            [(i, v, vector_norm(v)) for i, v in enumerate(qvs)],
+            "qid int, qvec array<double>, qnorm double",
         )
-        vec = self._vec()
-        sim = (
-            dot(vec, F.col("qvec"))
-            if metric == "dot"
-            else cosine_similarity(vec, F.col("qvec"))
-        )
+        sim = topk_score(self._vec(), "qvec", metric, b_norm="qnorm")
         base = self.df.filter(
             compile_filters(f_where, promoted_columns=self.df.columns)
         )
-        scored = (
-            base.crossJoin(F.broadcast(queries))
-            .withColumn("similarity", sim)
-            .filter((F.col("similarity") > 0) & ~F.isnan("similarity"))
-            .select("qid", "id", "document", "similarity", "metadata")
+        scored = base.crossJoin(F.broadcast(queries)).select(
+            "qid", "id", "document", sim.alias("similarity"), "metadata"
         )
         w = Window.partitionBy("qid").orderBy(F.desc("similarity"), F.asc("id"))
         return (
             scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= num_results)
+            # NULL (dropped) scores rank last in each qid
+            .filter((F.col("rank") <= num_results) & F.col("similarity").isNotNull())
             .drop("rank")
             .orderBy("qid", F.desc("similarity"), F.asc("id"))
         )
@@ -977,14 +977,14 @@ class EmbeddingCollection:
                       text_col: str = "document"):
         """Streaming twin of append(): embed + append micro-batches to this
         SAVED collection's path (streaming/pipeline.py does the plumbing).
-        Marks any built ANN index stale up front — appended rows are not in
-        the persisted hash table. Returns the StreamingQuery."""
+        Marks any built ANN or PQ index stale up front — appended rows are
+        not in the persisted hash table or codes. Returns the
+        StreamingQuery."""
         from valentinus_spark.streaming.pipeline import stream_collection_append
 
         entry = self.catalog.resolve(self.view)
-        if entry.get("ann_index"):
-            entry["ann_index"] = "stale"
-            self.catalog.add(self.view, entry)
+        _mark_indexes_stale(entry)
+        self.catalog.add(self.view, entry)
         return stream_collection_append(
             docs_stream, self.embedder, entry["path"], checkpoint, text_col
         )

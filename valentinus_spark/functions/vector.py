@@ -4,14 +4,25 @@ path).
 The reference's only scalar computation is the raw dot product inside its
 scan loop (embeddings.rs:365: ``Σ qᵢ·cᵢ``) and KdTree L2 distance
 (embeddings.rs:402-408). Here each is a composition of ``zip_with`` +
-``aggregate`` over ``array<float>`` columns — whole-stage-codegen'd, so a
-cosine scan is a single codegen stage over columnar Parquet input instead
-of the reference's single-threaded deserialized-blob loop.
+``aggregate`` over ``array<float>`` columns, so a cosine scan runs on the
+executors over columnar Parquet input instead of the reference's
+single-threaded deserialized-blob loop.
 
 All functions accept a column (array<numeric>) and either another column or
-a Python list (compiled to an array literal — the broadcast-query-vector
-case: the driver embeds the query once and ships it as a literal into every
-task, embeddings.rs:343-349 ≈ literal_vector).
+a Python list (the broadcast-query-vector case: the driver embeds the query
+once and ships it as a literal into every task, embeddings.rs:343-349 ≈
+literal_vector).
+
+Per-row cost. In Spark 4.1 ``zip_with`` and ``aggregate`` are
+``CodegenFallback``: they run interpreted, element by element, and Catalyst
+does not de-duplicate a subexpression that appears twice around or inside
+them. So each array fold written into an expression is one more pass over
+the row's elements at run time. The kernels therefore fold each array once
+and bind the result as the argument of ``aggregate``'s finish lambda
+instead of writing it twice, and anything that depends only on the query
+(its norm) is computed on the driver. A per-query scalar stays inside the
+lambda: outside it, in a code-generated operator, a ``double`` literal is
+inlined into the generated Java and every query compiles anew.
 
 Accumulation is double-precision left-fold regardless of input element
 type, matching DuckDB's list_dot_product closely enough that results agree
@@ -20,34 +31,109 @@ to ~1e-12 (the correctness harness rounds to 4 decimals).
 
 from __future__ import annotations
 
+import json
+import math
+import re
 from typing import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# a name F.col takes verbatim (no dots or backticks to parse)
+_PLAIN_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _json_vector(values: Sequence[float]) -> str:
+    return json.dumps([float(v) for v in values])
+
 
 def literal_vector(values: Sequence[float]) -> Column:
-    """A query vector as an array<double> literal (broadcast to all tasks)."""
-    return F.array(*[F.lit(float(v)) for v in values])
+    """A query vector as an array<double> literal (broadcast to all tasks).
+
+    Built as ONE plan node: a JSON string literal read by ``from_json``,
+    which constant folding turns into a single array literal. The obvious
+    ``F.array(*[F.lit(v) ...])`` costs a Py4J round trip per element (385
+    calls, ~190 ms at dim 384, paid on every query) and leaves a
+    ``CreateArray`` of ``dim`` children in the plan. Python's float repr
+    round-trips exactly and Spark's JSON reader accepts ``NaN`` and
+    ``±Infinity``, so the values are bit-identical to ``F.lit``'s,
+    including ``-0.0`` and subnormals."""
+    return F.from_json(F.lit(_json_vector(values)), "array<double>")
 
 
-def _as_col(v: Column | Sequence[float]) -> Column:
-    return v if isinstance(v, Column) else literal_vector(v)
+def vector_norm(values: Sequence[float]) -> float:
+    """Euclidean norm folded left to right in double: the same order and
+    rounding as the per-row ``aggregate`` fold, so a query norm computed
+    here equals the one Spark would compute bit for bit (``sum`` is not
+    used: from Python 3.12 it compensates float rounding)."""
+    acc = 0.0
+    for v in values:
+        v = float(v)
+        acc += v * v
+    return math.sqrt(acc)
 
 
-def dot(a: Column | str, b: Column | Sequence[float]) -> Column:
-    """Raw dot product (reference embeddings.rs:365)."""
-    a = F.col(a) if isinstance(a, str) else a
-    return F.aggregate(
-        F.zip_with(a.cast("array<double>"), _as_col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _col(v: Column | str | Sequence[float]) -> Column:
+    """A vector operand as a Column: a column name or a literal vector."""
+    if isinstance(v, Column):
+        return v
+    return F.col(v) if isinstance(v, str) else literal_vector(v)
+
+
+def _sql(v: Column | str | Sequence[float]) -> str | None:
+    """A vector operand as SQL text: a plain column name or a literal
+    vector. None for a Column expression, which only the Column API can
+    take.
+
+    Where every operand has SQL text, a kernel is built by ONE
+    ``F.expr`` call. Through the Column API the same expression costs
+    ~130 Py4J round trips, each Column object one more when Python
+    frees it: ~50 ms of plan building per query. Both forms build the
+    same expression tree."""
+    if isinstance(v, Column):
+        return None
+    if isinstance(v, str):
+        return f"`{v}`" if _PLAIN_NAME.fullmatch(v) else None
+    return f"from_json('{_json_vector(v)}', 'array<double>')"
+
+
+def _sum_sq(a: Column, finish=None) -> Column:
+    """Σ x² of an array<double>, optionally passed to ``finish``."""
+    if finish is None:
+        return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
+    return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x, finish)
+
+
+def _let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` computed once and bound to ``v``: the
+    finish argument of an ``aggregate`` over an empty array (folded to a
+    constant). Written out twice, a value would be computed twice; inside
+    a per-element lambda, once per element."""
+    return F.aggregate(F.array(), value, lambda acc, x: acc, body)
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), {b}, (x, y) -> x * y), "
+        "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a.cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x)
+def _dot_text(a, b) -> str | None:
+    """SQL text of ``dot`` when every operand has SQL text."""
+    sa, sb = _sql(a), _sql(b)
+    return _dot_sql(sa, sb) if sa and sb else None
+
+
+def dot(a: Column | str, b: Column | str | Sequence[float]) -> Column:
+    """Raw dot product (reference embeddings.rs:365)."""
+    text = _dot_text(a, b)
+    if text:
+        return F.expr(text)
+    return F.aggregate(
+        F.zip_with(_col(a).cast("array<double>"), _col(b), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
 
 
@@ -71,30 +157,136 @@ def finite_embedding(a: Column | str) -> Column:
     covers both: any NaN/Inf component or an overflowing norm² makes
     the sum non-finite."""
     a = F.col(a) if isinstance(a, str) else a
-    n2 = F.aggregate(
-        a.cast("array<double>"), F.lit(0.0), lambda acc, x: acc + x * x
-    )
-    return finite_score(n2)
+    return finite_score(_sum_sq(a.cast("array<double>")))
 
 
-def cosine_similarity(a: Column | str, b: Column | Sequence[float]) -> Column:
+def cosine_similarity(
+    a: Column | str,
+    b: Column | str | Sequence[float],
+    b_norm: str | None = None,
+) -> Column:
     """True cosine = dot/(|a||b|). The reference calls its raw dot "cosine"
     (embeddings.rs:334-372) — that is only cosine for pre-normalized
-    vectors; ``dot()`` is the compat mode (SURVEY.md §7.4.2)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = _as_col(b)
-    denom = _norm(a.cast("array<double>")) * _norm(b)
-    # zero vectors (e.g. empty documents) get similarity 0, not a
-    # divide-by-zero (ANSI mode errors on x/0)
-    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
+    vectors; ``dot()`` is the compat mode (SURVEY.md §7.4.2).
+
+    Zero vectors (e.g. empty documents) and NULL rows score 0.0, never a
+    division by zero (ANSI mode errors on x/0); a NaN component gives NaN.
+
+    Passes per row: a literal query's norm is computed on the driver
+    (``vector_norm``) and enters the plan as a constant, so a row costs
+    one fold for |a| plus the ``zip_with`` product and its sum, 3 passes
+    where writing the formula out costs 6 (|a| in the zero test and in
+    the divisor, |b| likewise, the product, the sum). ``b_norm`` names a
+    column holding |b| for a column ``b`` (batched queries whose norms
+    the driver computed); without it |b| is folded once per row. The
+    results are bit-identical to the written-out formula."""
+    text = _cosine_text(a, b, b_norm)
+    return F.expr(text) if text else _cosine(a, b, b_norm)
 
 
-def l2_distance(a: Column | str, b: Column | Sequence[float]) -> Column:
+def _query_norm(b, b_norm: str | None) -> float | str | None:
+    """|b| of a literal query, else the column named by ``b_norm``."""
+    return b_norm if isinstance(b, (Column, str)) else vector_norm(b)
+
+
+def _cosine_text(a, b, b_norm: str | None) -> str | None:
+    """SQL text of ``_cosine`` when every operand has SQL text."""
+    norm = _query_norm(b, b_norm)
+    sa, sb = _sql(a), _sql(b)
+    if isinstance(norm, float):
+        sn = f"CAST('{norm!r}' AS DOUBLE)"  # repr round-trips, 'nan'/'inf' too
+    else:
+        sn = norm and _sql(norm)
+    if sa and sb and (sn or norm is None):
+        return _cosine_sql(sa, sb, sn)
+    return None
+
+
+def _cosine_sql(a: str, b: str, b_norm: str | None) -> str:
+    if b_norm is None:
+        return (
+            f"CASE WHEN {b} IS NULL THEN 0.0D ELSE aggregate(CAST({b} AS ARRAY<DOUBLE>), "
+            f"0.0D, (bacc, bx) -> bacc + bx * bx, bn2 -> {_cosine_sql(a, b, 'sqrt(bn2)')}) END"
+        )
+    denom = f"sqrt(n2) * {b_norm}"
+    return (
+        f"CASE WHEN {a} IS NULL THEN 0.0D ELSE aggregate(CAST({a} AS ARRAY<DOUBLE>), "
+        f"0.0D, (acc, x) -> acc + x * x, n2 -> CASE WHEN {denom} > 0 "
+        f"THEN {_dot_sql(a, b)} / ({denom}) ELSE 0.0D END) END"
+    )
+
+
+def _cosine(a, b, b_norm: str | None) -> Column:
+    """dot(a, b)/(|a|·|b|) through the Column API, for operands that are
+    Column expressions. |a| is folded once and bound as the finish
+    lambda's argument, used twice (the zero test, the divisor); a column
+    ``b`` without ``b_norm`` has |b| folded and bound the same way."""
+    norm = _query_norm(b, b_norm)
+    a, b = _col(a), _col(b)
+    if norm is None:
+        return F.when(b.isNull(), F.lit(0.0)).otherwise(
+            _sum_sq(b.cast("array<double>"), lambda n2: _cosine_by(a, b, F.sqrt(n2)))
+        )
+    return _cosine_by(a, b, F.lit(norm) if isinstance(norm, float) else F.col(norm))
+
+
+def _cosine_by(a: Column, b: Column, b_norm: Column) -> Column:
+    def finish(n2: Column) -> Column:
+        denom = F.sqrt(n2) * b_norm
+        return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
+
+    return F.when(a.isNull(), F.lit(0.0)).otherwise(
+        _sum_sq(a.cast("array<double>"), finish)
+    )
+
+
+def topk_score(
+    a: Column | str,
+    b: Column | str | Sequence[float],
+    metric: str = "cosine",
+    b_norm: str | None = None,
+    positive_only: bool = True,
+) -> Column:
+    """The score of a similarity-desc top-k: true cosine, or with
+    ``metric="dot"`` the reference's raw dot (embeddings.rs:365;
+    SURVEY.md §7.4.2); ``b_norm`` as in :func:`cosine_similarity`.
+
+    NULL for a row the top-k must not return. Spark's float order puts
+    NaN above +Infinity and takes ``NaN > 0`` as true, so a NaN score (a
+    NaN component, or an Inf row under cosine) would rank first; it is
+    NULL. ``positive_only`` adds the reference's keep-rule ``score > 0``
+    (embeddings.rs:366, where Rust's ``NaN > 0.0`` is false); +Inf
+    stays, as in the reference. Rank with NULLs last, take k, then drop
+    the NULLs: a filter on the score placed BEFORE the top-k is pushed
+    below the projection with the score inlined, once per comparison, so
+    each row would compute the kernel three times. The keep test reads
+    the score through ``_let``, so the kernel runs once."""
+    keep = "s > 0 AND NOT isnan(s)" if positive_only else "NOT isnan(s)"
+    text = _dot_text(a, b) if metric == "dot" else _cosine_text(a, b, b_norm)
+    if text:  # _let as SQL text
+        return F.expr(
+            f"aggregate(array(), {text}, (acc, x) -> acc, s -> CASE WHEN {keep} THEN s END)"
+        )
+    score = dot(a, b) if metric == "dot" else _cosine(a, b, b_norm)
+
+    def body(s: Column) -> Column:
+        ok = ~F.isnan(s)
+        return F.when((s > 0) & ok if positive_only else ok, s)
+
+    return _let(score, body)
+
+
+def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Euclidean distance (reference KdTree metric, embeddings.rs:402-408)."""
-    a = F.col(a) if isinstance(a, str) else a
+    sa, sb = _sql(a), _sql(b)
+    if sa and sb:
+        return F.expr(
+            f"sqrt(aggregate(zip_with(CAST({sa} AS ARRAY<DOUBLE>), {sb}, "
+            "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x))"
+        )
     return F.sqrt(
         F.aggregate(
-            F.zip_with(a.cast("array<double>"), _as_col(b), lambda x, y: (x - y) * (x - y)),
+            F.zip_with(_col(a).cast("array<double>"), _col(b), lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -102,11 +294,17 @@ def l2_distance(a: Column | str, b: Column | Sequence[float]) -> Column:
 
 
 def l2_normalize(a: Column | str) -> Column:
-    """Unit-normalize an embedding column (so raw dot ≡ cosine)."""
+    """Unit-normalize an embedding column (so raw dot ≡ cosine). The norm
+    is bound as the finish lambda's argument: written into the
+    ``transform`` lambda it would be folded again for every element."""
     a = F.col(a) if isinstance(a, str) else a
     a = a.cast("array<double>")
-    n = _norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x / n)).otherwise(a)
+
+    def finish(n2: Column) -> Column:
+        n = F.sqrt(n2)
+        return F.when(n > 0, F.transform(a, lambda x: x / n)).otherwise(a)
+
+    return _sum_sq(a, finish)
 
 
 def zorder_key(*cols, bits: int = 16):
@@ -137,16 +335,21 @@ def quantize_embedding(a: Column | str):
     shuffle than float32, ~8x than the double it widens to in compute.
     For cosine ranking the scale CANCELS (cos(q·s) = cos(q)), so
     approximate search over quantized vectors needs no dequantization
-    at all; dequantize only to recover absolute magnitudes."""
-    from pyspark.sql import functions as F
+    at all; dequantize only to recover absolute magnitudes.
 
+    The scale is bound by ``_let``: written into the ``transform`` lambda,
+    its max-abs fold would run again for every element (O(dim²) per row)."""
     a = F.col(a) if isinstance(a, str) else a
     mx = F.aggregate(
         a, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x.cast("double")))
     )
     scale = F.when(mx > 0, mx / 127.0).otherwise(F.lit(1.0))
-    q = F.transform(a, lambda x: F.round(x.cast("double") / scale).cast("tinyint"))
-    return F.struct(q.alias("q"), scale.cast("float").alias("scale"))
+
+    def body(s: Column) -> Column:
+        q = F.transform(a, lambda x: F.round(x.cast("double") / s).cast("tinyint"))
+        return F.struct(q.alias("q"), s.cast("float").alias("scale"))
+
+    return _let(scale, body)
 
 
 def dequantize_embedding(qs: Column | str) -> Column:

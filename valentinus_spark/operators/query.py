@@ -16,7 +16,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from valentinus_spark.functions.vector import cosine_similarity, dot, l2_distance
+from valentinus_spark.functions.vector import l2_distance, topk_score
 
 
 def cosine_topk(
@@ -34,19 +34,19 @@ def cosine_topk(
     ``metric`` ∈ {cosine, dot}; ``pred`` is an optional pre-filter (the
     compiled metadata predicate — applied BEFORE scoring, exactly the
     reference's filter-then-score order, embeddings.rs:361-365, but pushed
-    to the scan by Catalyst)."""
-    score = (
-        dot(vec_col, query_vector)
-        if metric == "dot"
-        else cosine_similarity(vec_col, query_vector)
-    )
+    to the scan by Catalyst). NaN scores never rank and
+    ``keep_positive_only`` is the reference's ``score > 0`` keep-rule,
+    both through ``topk_score`` as in ``EmbeddingCollection.cosine_query``."""
     out = df
     if pred is not None:
         out = out.filter(pred)
-    out = out.withColumn("similarity", score)
-    if keep_positive_only:
-        out = out.filter(F.col("similarity") > 0)  # embeddings.rs:366
-    return out.orderBy(F.desc("similarity"), F.asc(id_col)).limit(k)
+    score = topk_score(vec_col, query_vector, metric, positive_only=keep_positive_only)
+    return (
+        out.withColumn("similarity", score)
+        .orderBy(F.desc("similarity"), F.asc(id_col))
+        .limit(k)
+        .filter("similarity IS NOT NULL")
+    )
 
 
 def nearest_topk(
