@@ -1,9 +1,10 @@
 """Vector kernels (functions/vector.py): the one-node query literal, the
-driver-side query norm and the SQL-text and Column-API forms of each
-kernel, checked bit for bit against the written-out formula."""
+driver-normalized literal query and the bound folds, checked against the
+written-out formula and numpy."""
 
 import json
 import math
+import re
 import struct
 
 import numpy as np
@@ -12,12 +13,10 @@ from pyspark.sql import functions as F
 
 from valentinus_spark.functions.vector import (
     cosine_similarity,
-    dot,
-    l2_distance,
     l2_normalize,
     literal_vector,
     quantize_embedding,
-    vector_norm,
+    unit_vector,
 )
 from valentinus_spark.operators.query import cosine_topk
 
@@ -37,8 +36,8 @@ def _bits(x: float) -> bytes:
 
 
 def _written_out_cosine(a, b):
-    """The reference formula as written before the kernels bound their
-    folds: |a| and |b| folded in the zero test and again in the divisor."""
+    """The formula as written before the kernels bound their folds: |a|
+    and |b| folded in the zero test and again in the divisor."""
     a = a.cast("array<double>")
     b = b.cast("array<double>")
 
@@ -57,18 +56,17 @@ def test_literal_vector_is_bit_identical_to_per_element_lits(spark):
     assert [_bits(x) for x in row["new"]] == [_bits(float(v)) for v in EDGE_VALUES]
 
 
-def test_vector_norm_matches_spark_fold(spark):
+def test_unit_vector():
     rng = np.random.default_rng(5)
-    vecs = [rng.standard_normal(37).tolist() for _ in range(5)]
-    vecs += [[0.0] * 4, [1e200, 1e200], [5e-324, 1.0], [float("nan"), 1.0], [float("inf")]]
-    got = spark.range(1).select(
-        *[
-            F.sqrt(F.aggregate(literal_vector(v), F.lit(0.0), lambda acc, x: acc + x * x)).alias(f"n{i}")
-            for i, v in enumerate(vecs)
-        ]
-    ).first()
-    for i, v in enumerate(vecs):
-        assert _bits(vector_norm(v)) == _bits(got[f"n{i}"]), v
+    for _ in range(5):
+        u = unit_vector(rng.standard_normal(37).tolist())
+        assert math.sqrt(sum(x * x for x in u)) == pytest.approx(1.0, abs=1e-15)
+    assert unit_vector([3, 4]) == [0.6, 0.8]
+    assert unit_vector([0.0, -0.0]) == [0.0, 0.0]
+    assert unit_vector([5e-324, 5e-324]) == [0.0, 0.0]  # norm underflows to 0
+    nan = unit_vector([float("nan"), 1.0])
+    assert math.isnan(nan[0]) and nan[1] == 1.0
+    assert math.isnan(unit_vector([float("inf"), 1.0])[0])
 
 
 @pytest.fixture(scope="module")
@@ -87,50 +85,37 @@ def vec_rows(spark):
     df = spark.createDataFrame(
         [(i, v, q) for i, v in rows], "id int, embedding array<float>, qvec array<double>"
     )
-    return df.withColumn("qnorm", F.lit(vector_norm(q))), q, dim
+    return df, q, dim
 
 
-def _same(x, y) -> bool:
-    """Equal bits, or both NULL, or both NaN (whose sign and payload
-    depend on the operation that made them)."""
+def _close(x, y) -> bool:
+    """Within 1e-12, or both NULL, or both NaN."""
     if x is None or y is None:
         return x is y
     if math.isnan(x) or math.isnan(y):
         return math.isnan(x) and math.isnan(y)
-    return _bits(x) == _bits(y)
+    return abs(x - y) <= 1e-12
 
 
-def test_cosine_forms_agree_bit_for_bit(vec_rows):
-    """List query, column query, column query with its norm column, each
-    through SQL text (names) and the Column API (Columns), all equal the
-    written-out formula bit for bit."""
+def test_cosine_list_and_column_queries_agree(vec_rows):
+    """A list query (normalized on the driver) and a column query (|b|
+    folded per row) agree with the written-out formula within 1e-12 and
+    keep its zero-row, NaN-row, Inf-row and NULL-row values."""
     df, q, _ = vec_rows
-    emb, qv = F.col("embedding"), F.col("qvec")
-    forms = {
-        "ref": _written_out_cosine(emb, qv),
-        "list_sql": cosine_similarity("embedding", q),
-        "list_col": cosine_similarity(emb, q),
-        "column_sql": cosine_similarity("embedding", "qvec"),
-        "column_col": cosine_similarity(emb, qv),
-        "norm_sql": cosine_similarity("embedding", "qvec", b_norm="qnorm"),
-        "norm_col": cosine_similarity(F.col("embedding"), qv, b_norm="qnorm"),
-        "dot_sql": dot("embedding", q),
-        "dot_col": dot(emb, literal_vector(q)),
-        "l2_sql": l2_distance("embedding", q),
-        "l2_col": l2_distance(emb, q),
-    }
-    rows = df.select("id", *[c.alias(k) for k, c in forms.items()]).orderBy("id").collect()
+    rows = df.select(
+        "id",
+        _written_out_cosine(F.col("embedding"), F.col("qvec")).alias("ref"),
+        cosine_similarity("embedding", q).alias("list"),
+        cosine_similarity(F.col("embedding"), F.col("qvec")).alias("column"),
+    ).collect()
     for r in rows:
-        for k in forms:
-            if k.startswith(("list", "column", "norm")):
-                assert _same(r[k], r["ref"]), (r["id"], k, r[k], r["ref"])
-        assert _same(r["dot_sql"], r["dot_col"]), r["id"]
-        assert _same(r["l2_sql"], r["l2_col"]), r["id"]
+        assert _close(r["list"], r["ref"]) and _close(r["column"], r["ref"]), r
     by_id = {r["id"]: r for r in rows}
-    assert by_id[40]["list_sql"] == 0.0  # zero row
-    assert math.isnan(by_id[41]["list_sql"])  # NaN row passes through
-    assert math.isnan(by_id[42]["list_sql"])  # Inf row: inf/inf
-    assert by_id[43]["list_sql"] == 0.0 and by_id[43]["ref"] == 0.0  # NULL row
+    for form in ("list", "column"):
+        assert by_id[40][form] == 0.0  # zero row
+        assert math.isnan(by_id[41][form])  # NaN row passes through
+        assert math.isnan(by_id[42][form])  # Inf row: inf/inf
+        assert by_id[43][form] == 0.0  # NULL row
 
 
 def test_cosine_list_query_matches_numpy(vec_rows):
@@ -144,9 +129,11 @@ def test_cosine_list_query_matches_numpy(vec_rows):
 
 @pytest.mark.parametrize("kind", ["zero", "nan", "inf", "overflow", "subnormal"])
 def test_cosine_degenerate_queries(vec_rows, kind):
-    """A zero query scores every finite row 0.0, as before; NaN, Inf and
-    norm-overflowing queries and a norm that underflows to 0 give exactly
-    the written-out formula's values."""
+    """A zero query, or one whose norm underflows to 0, scores every
+    finite row 0.0; a NaN or Inf query scores NaN; a query whose norm
+    overflows scores 0.0. List and column queries give the written-out
+    formula's values, except that a list query scores a zero row 0.0
+    even where the query is NaN or Inf."""
     df, _, dim = vec_rows
     q = {
         "zero": [0.0] * dim,
@@ -157,21 +144,23 @@ def test_cosine_degenerate_queries(vec_rows, kind):
     }[kind]
     rows = df.select(
         "id",
-        cosine_similarity("embedding", q).alias("sql"),
-        cosine_similarity(F.col("embedding"), q).alias("col"),
+        cosine_similarity("embedding", q).alias("list"),
+        cosine_similarity("embedding", literal_vector(q)).alias("column"),
         _written_out_cosine(F.col("embedding"), literal_vector(q)).alias("ref"),
     ).collect()
     for r in rows:
-        assert _same(r["sql"], r["ref"]) and _same(r["col"], r["ref"]), (kind, r)
-        if kind == "zero" and (r["id"] < 41 or r["id"] == 43):
-            assert r["sql"] == 0.0, r
+        if r["id"] != 40:
+            assert _close(r["list"], r["column"]) and _close(r["list"], r["ref"]), (kind, r)
+        if r["id"] < 41:
+            want = math.nan if kind in ("nan", "inf") and r["id"] != 40 else 0.0
+            assert _close(r["list"], want), (kind, r)
 
 
 def test_cosine_query_plan_holds_query_as_one_literal(spark, fresh_warehouse):
     """The query vector enters the plan as one literal (no CreateArray of
-    dim children), and the optimized plan scores each row once: the
-    keep-rule filter sits above the top-k, so Catalyst does not inline the
-    kernel into a pushed-down filter."""
+    dim children), each row is scored once (no keep-rule filter for
+    Catalyst to push below the projection with the kernel inlined), and
+    the top-k is the plan's root, merged on the driver: no shuffle."""
     from valentinus_spark.collection import EmbeddingCollection
     from valentinus_spark.embed import HashEmbedder
 
@@ -181,15 +170,18 @@ def test_cosine_query_plan_holds_query_as_one_literal(spark, fresh_warehouse):
         None, "planlit", embedder=HashEmbedder(dim=dim),
     ).save(promote_keys={"Year": "int"})
     df = col.cosine_query("doc words", num_results=3, f_where=[{"Year": {"gte": 2001}}])
+    assert df.count() > 0
     qe = df._jdf.queryExecution()
     analyzed = qe.analyzed().toString()
-    assert "array(" not in analyzed.replace("array()", "")
+    assert not re.search(r"array\(-?\d", analyzed)  # no CreateArray of literals
     qv = [float(x) for x in col.embedder.embed_texts(["doc words"])[0]]
-    assert analyzed.count(json.dumps(qv)) == 1
+    assert analyzed.count(json.dumps(unit_vector(qv))) == 1
     optimized = qe.optimizedPlan().toString()
     assert "from_json" not in optimized  # constant-folded to one array literal
     assert optimized.count("zip_with(") == 1
-    assert df.count() > 0
+    physical = qe.executedPlan().toString()
+    assert "TakeOrderedAndProject" in physical.splitlines()[0]
+    assert "Exchange" not in physical
 
 
 def test_cosine_topk_never_ranks_nan_first(spark):
@@ -244,5 +236,5 @@ def test_bound_folds_match_written_out_forms(vec_rows):
         if r["n_old"] is None:
             assert r["n_new"] is None, r["id"]
         else:
-            assert all(_same(x, y) for x, y in zip(r["n_new"], r["n_old"])), r["id"]
+            assert [_bits(x) for x in r["n_new"]] == [_bits(x) for x in r["n_old"]], r["id"]
         assert r["q_new"] == r["q_old"], r["id"]

@@ -55,7 +55,14 @@ from valentinus_spark.errors import (
     ViewNameError,
 )
 from valentinus_spark.filters import compile_filters
-from valentinus_spark.functions.vector import l2_distance, topk_score, vector_norm
+from valentinus_spark.functions.vector import (
+    cosine_similarity,
+    dot,
+    l2_distance,
+    topk_score,
+    unit_cosine,
+    unit_vector,
+)
 from valentinus_spark.session import warehouse_dir
 
 # reference view-name gate (embeddings.rs:107-109)
@@ -705,12 +712,12 @@ class EmbeddingCollection:
     # ---------------- queries (T4-T7) -------------------------------------
 
     def _vec(self):
-        """Vector operand: the float column's name, or transparent
-        dequantize of an int8-quantized collection (save(quantize=True))."""
+        """Vector expression: the float column, or transparent dequantize
+        of an int8-quantized collection (save(quantize=True))."""
         from valentinus_spark.functions.vector import dequantize_embedding
 
         if "embedding" in self.df.columns:
-            return "embedding"
+            return F.col("embedding")
         if "embedding_q" in self.df.columns:
             return dequantize_embedding("embedding_q")
         raise NotFoundError("collection has no embeddings — save() first")
@@ -726,12 +733,11 @@ class EmbeddingCollection:
         """Metadata-filtered similarity scan (reference cosine_query,
         embeddings.rs:334-382).
 
-        Plan: filter(metadata predicate) → project(similarity) →
-        TakeOrdered(k) → filter(similarity not NULL). Catalyst pushes the
-        compiled metadata predicate to the Parquet scan; the similarity is
-        computed once per row, NULL where the dot>0 keep-rule drops the row
-        (``topk_score``); TakeOrderedAndProject does a per-partition top-k
-        then a driver merge — no global sort shuffle.
+        Plan: filter(metadata predicate) → generate(similarity, dropping
+        rows the keep-rule rejects) → TakeOrdered(k). Catalyst pushes the
+        compiled metadata predicate to the Parquet scan; each kept row is
+        scored once (``topk_score``); TakeOrderedAndProject does a
+        per-partition top-k then a driver merge — no shuffle.
 
         - ``metric="cosine"`` (default) = true cosine; ``metric="dot"`` =
           reference's raw dot (embeddings.rs:365; SURVEY.md §7.4.2).
@@ -741,21 +747,27 @@ class EmbeddingCollection:
         - ``num_results=0`` → all matches (embeddings.rs:375).
         """
         qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
-        out = self.df.filter(
-            compile_filters(f_where, promoted_columns=self.df.columns)
-        ).select(
-            "id",
-            "document",
-            topk_score(self._vec(), qv, metric).alias("similarity"),
-            "metadata",
+        vec = self._vec()
+        sim = dot(vec, qv) if metric == "dot" else cosine_similarity(vec, qv)
+        out = (
+            self.df.filter(
+                compile_filters(f_where, promoted_columns=self.df.columns)
+            )
+            # no row where the dot>0 keep-rule (embeddings.rs:366) or the
+            # NaN guard drops it (Rust's NaN > 0.0 is FALSE; Spark's total
+            # order would keep NaN AND rank it above +Inf)
+            .select(
+                "id",
+                "document",
+                F.explode(topk_score(sim)).alias("similarity"),
+                "metadata",
+            )
         )
-        if not ordered:  # first-k in storage order: keep-rule before the cut
-            out = out.filter("similarity IS NOT NULL")
-        else:  # NULLs sort last, so the top-k holds every kept row first
+        if ordered:
             out = out.orderBy(F.desc("similarity"), F.asc("id"))
         if num_results > 0:
             out = out.limit(num_results)
-        return out.filter("similarity IS NOT NULL") if ordered else out
+        return out
 
     def cosine_query_many(
         self,
@@ -775,23 +787,27 @@ class EmbeddingCollection:
         if not query_strings:
             raise ValueError("query_strings must be non-empty")
         qvs = [[float(x) for x in v] for v in self.embedder.embed_texts(list(query_strings))]
-        # each probe's norm is computed here, once, not per row and probe
+        if metric != "dot":  # normalized here, once, not per row and probe
+            qvs = [unit_vector(v) for v in qvs]
         queries = self.spark.createDataFrame(
-            [(i, v, vector_norm(v)) for i, v in enumerate(qvs)],
-            "qid int, qvec array<double>, qnorm double",
+            list(enumerate(qvs)), "qid int, qvec array<double>"
         )
-        sim = topk_score(self._vec(), "qvec", metric, b_norm="qnorm")
+        vec = self._vec()
+        sim = dot(vec, "qvec") if metric == "dot" else unit_cosine(vec, "qvec")
         base = self.df.filter(
             compile_filters(f_where, promoted_columns=self.df.columns)
         )
         scored = base.crossJoin(F.broadcast(queries)).select(
-            "qid", "id", "document", sim.alias("similarity"), "metadata"
+            "qid",
+            "id",
+            "document",
+            F.explode(topk_score(sim)).alias("similarity"),
+            "metadata",
         )
         w = Window.partitionBy("qid").orderBy(F.desc("similarity"), F.asc("id"))
         return (
             scored.withColumn("rank", F.row_number().over(w))
-            # NULL (dropped) scores rank last in each qid
-            .filter((F.col("rank") <= num_results) & F.col("similarity").isNotNull())
+            .filter(F.col("rank") <= num_results)
             .drop("rank")
             .orderBy("qid", F.desc("similarity"), F.asc("id"))
         )

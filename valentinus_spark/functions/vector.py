@@ -20,9 +20,10 @@ them. So each array fold written into an expression is one more pass over
 the row's elements at run time. The kernels therefore fold each array once
 and bind the result as the argument of ``aggregate``'s finish lambda
 instead of writing it twice, and anything that depends only on the query
-(its norm) is computed on the driver. A per-query scalar stays inside the
-lambda: outside it, in a code-generated operator, a ``double`` literal is
-inlined into the generated Java and every query compiles anew.
+is done on the driver: a literal query is normalized there
+(``unit_vector``), so a cosine row costs |a| and the dot product and no
+per-query scalar enters the plan (a ``double`` literal outside a lambda is
+inlined into the generated Java, so every new query would compile anew).
 
 Accumulation is double-precision left-fold regardless of input element
 type, matching DuckDB's list_dot_product closely enough that results agree
@@ -33,18 +34,10 @@ from __future__ import annotations
 
 import json
 import math
-import re
 from typing import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# a name F.col takes verbatim (no dots or backticks to parse)
-_PLAIN_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-
-
-def _json_vector(values: Sequence[float]) -> str:
-    return json.dumps([float(v) for v in values])
 
 
 def literal_vector(values: Sequence[float]) -> Column:
@@ -58,19 +51,23 @@ def literal_vector(values: Sequence[float]) -> Column:
     round-trips exactly and Spark's JSON reader accepts ``NaN`` and
     ``±Infinity``, so the values are bit-identical to ``F.lit``'s,
     including ``-0.0`` and subnormals."""
-    return F.from_json(F.lit(_json_vector(values)), "array<double>")
+    return F.from_json(F.lit(json.dumps([float(v) for v in values])), "array<double>")
 
 
-def vector_norm(values: Sequence[float]) -> float:
-    """Euclidean norm folded left to right in double: the same order and
-    rounding as the per-row ``aggregate`` fold, so a query norm computed
-    here equals the one Spark would compute bit for bit (``sum`` is not
-    used: from Python 3.12 it compensates float rounding)."""
-    acc = 0.0
-    for v in values:
-        v = float(v)
-        acc += v * v
-    return math.sqrt(acc)
+def unit_vector(values: Sequence[float]) -> list[float]:
+    """``values / |values|``, computed on the driver, once per query.
+
+    A norm of 0 (all zeros, or one that underflows) gives the zero vector,
+    which scores every finite row 0.0; a NaN component keeps the vector
+    as it is, and it scores NaN. An Inf component makes the norm Inf and
+    its own entry Inf/Inf = NaN, so such a query scores NaN too: the
+    values the written-out dot/(|a||b|) gives, except that a zero row
+    scores 0.0 against any query."""
+    values = [float(v) for v in values]
+    norm = math.sqrt(sum(v * v for v in values))
+    if norm > 0:
+        return [v / norm for v in values]
+    return [0.0] * len(values) if norm == 0 else values
 
 
 def _col(v: Column | str | Sequence[float]) -> Column:
@@ -78,23 +75,6 @@ def _col(v: Column | str | Sequence[float]) -> Column:
     if isinstance(v, Column):
         return v
     return F.col(v) if isinstance(v, str) else literal_vector(v)
-
-
-def _sql(v: Column | str | Sequence[float]) -> str | None:
-    """A vector operand as SQL text: a plain column name or a literal
-    vector. None for a Column expression, which only the Column API can
-    take.
-
-    Where every operand has SQL text, a kernel is built by ONE
-    ``F.expr`` call. Through the Column API the same expression costs
-    ~130 Py4J round trips, each Column object one more when Python
-    frees it: ~50 ms of plan building per query. Both forms build the
-    same expression tree."""
-    if isinstance(v, Column):
-        return None
-    if isinstance(v, str):
-        return f"`{v}`" if _PLAIN_NAME.fullmatch(v) else None
-    return f"from_json('{_json_vector(v)}', 'array<double>')"
 
 
 def _sum_sq(a: Column, finish=None) -> Column:
@@ -105,31 +85,16 @@ def _sum_sq(a: Column, finish=None) -> Column:
 
 
 def _let(value: Column, body) -> Column:
-    """``body(v)`` with ``value`` computed once and bound to ``v``: the
-    finish argument of an ``aggregate`` over an empty array (folded to a
-    constant). Written out twice, a value would be computed twice; inside
-    a per-element lambda, once per element."""
+    """``body(v)`` with ``value`` computed once and bound to ``v``: an
+    ``aggregate`` over an empty array evaluates its zero argument
+    (``value``) once per row and hands it to the finish lambda. Written
+    out twice, a value would be computed twice; inside a per-element
+    lambda, once per element."""
     return F.aggregate(F.array(), value, lambda acc, x: acc, body)
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), {b}, (x, y) -> x * y), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _dot_text(a, b) -> str | None:
-    """SQL text of ``dot`` when every operand has SQL text."""
-    sa, sb = _sql(a), _sql(b)
-    return _dot_sql(sa, sb) if sa and sb else None
 
 
 def dot(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Raw dot product (reference embeddings.rs:365)."""
-    text = _dot_text(a, b)
-    if text:
-        return F.expr(text)
     return F.aggregate(
         F.zip_with(_col(a).cast("array<double>"), _col(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -160,11 +125,7 @@ def finite_embedding(a: Column | str) -> Column:
     return finite_score(_sum_sq(a.cast("array<double>")))
 
 
-def cosine_similarity(
-    a: Column | str,
-    b: Column | str | Sequence[float],
-    b_norm: str | None = None,
-) -> Column:
+def cosine_similarity(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """True cosine = dot/(|a||b|). The reference calls its raw dot "cosine"
     (embeddings.rs:334-372) — that is only cosine for pre-normalized
     vectors; ``dot()`` is the compat mode (SURVEY.md §7.4.2).
@@ -172,67 +133,36 @@ def cosine_similarity(
     Zero vectors (e.g. empty documents) and NULL rows score 0.0, never a
     division by zero (ANSI mode errors on x/0); a NaN component gives NaN.
 
-    Passes per row: a literal query's norm is computed on the driver
-    (``vector_norm``) and enters the plan as a constant, so a row costs
-    one fold for |a| plus the ``zip_with`` product and its sum, 3 passes
-    where writing the formula out costs 6 (|a| in the zero test and in
-    the divisor, |b| likewise, the product, the sum). ``b_norm`` names a
-    column holding |b| for a column ``b`` (batched queries whose norms
-    the driver computed); without it |b| is folded once per row. The
-    results are bit-identical to the written-out formula."""
-    text = _cosine_text(a, b, b_norm)
-    return F.expr(text) if text else _cosine(a, b, b_norm)
-
-
-def _query_norm(b, b_norm: str | None) -> float | str | None:
-    """|b| of a literal query, else the column named by ``b_norm``."""
-    return b_norm if isinstance(b, (Column, str)) else vector_norm(b)
-
-
-def _cosine_text(a, b, b_norm: str | None) -> str | None:
-    """SQL text of ``_cosine`` when every operand has SQL text."""
-    norm = _query_norm(b, b_norm)
-    sa, sb = _sql(a), _sql(b)
-    if isinstance(norm, float):
-        sn = f"CAST('{norm!r}' AS DOUBLE)"  # repr round-trips, 'nan'/'inf' too
-    else:
-        sn = norm and _sql(norm)
-    if sa and sb and (sn or norm is None):
-        return _cosine_sql(sa, sb, sn)
-    return None
-
-
-def _cosine_sql(a: str, b: str, b_norm: str | None) -> str:
-    if b_norm is None:
-        return (
-            f"CASE WHEN {b} IS NULL THEN 0.0D ELSE aggregate(CAST({b} AS ARRAY<DOUBLE>), "
-            f"0.0D, (bacc, bx) -> bacc + bx * bx, bn2 -> {_cosine_sql(a, b, 'sqrt(bn2)')}) END"
-        )
-    denom = f"sqrt(n2) * {b_norm}"
-    return (
-        f"CASE WHEN {a} IS NULL THEN 0.0D ELSE aggregate(CAST({a} AS ARRAY<DOUBLE>), "
-        f"0.0D, (acc, x) -> acc + x * x, n2 -> CASE WHEN {denom} > 0 "
-        f"THEN {_dot_sql(a, b)} / ({denom}) ELSE 0.0D END) END"
+    A literal query ``b`` is normalized on the driver (``unit_vector``)
+    and scored by ``unit_cosine``: |b| depends only on the query, so
+    folding it in the plan would repeat it on every row, and as a scalar
+    literal it would be inlined into generated code that then compiles
+    for every new query. A row then costs one fold for |a| and the dot
+    product; the written-out formula folds |a| and |b| twice each (zero
+    test, divisor). A column ``b`` has |b| folded once per row and bound
+    as ``aggregate``'s finish argument, as |a| is."""
+    if not isinstance(b, (Column, str)):
+        return unit_cosine(a, unit_vector(b))
+    b = _col(b)
+    return F.when(b.isNull(), F.lit(0.0)).otherwise(
+        _sum_sq(b.cast("array<double>"), lambda n2: _cosine_by(_col(a), b, F.sqrt(n2)))
     )
 
 
-def _cosine(a, b, b_norm: str | None) -> Column:
-    """dot(a, b)/(|a|·|b|) through the Column API, for operands that are
-    Column expressions. |a| is folded once and bound as the finish
-    lambda's argument, used twice (the zero test, the divisor); a column
-    ``b`` without ``b_norm`` has |b| folded and bound the same way."""
-    norm = _query_norm(b, b_norm)
-    a, b = _col(a), _col(b)
-    if norm is None:
-        return F.when(b.isNull(), F.lit(0.0)).otherwise(
-            _sum_sq(b.cast("array<double>"), lambda n2: _cosine_by(a, b, F.sqrt(n2)))
-        )
-    return _cosine_by(a, b, F.lit(norm) if isinstance(norm, float) else F.col(norm))
+def unit_cosine(a: Column | str, u: Column | str | Sequence[float]) -> Column:
+    """Cosine of ``a`` to a vector ``u`` of norm 1 (or 0, which scores
+    0.0): dot(a, u)/|a|, with |a| folded once. For queries the driver has
+    normalized, e.g. by ``unit_vector``."""
+    return _cosine_by(_col(a), _col(u), None)
 
 
-def _cosine_by(a: Column, b: Column, b_norm: Column) -> Column:
+def _cosine_by(a: Column, b: Column, b_norm: Column | None) -> Column:
+    """dot(a, b)/(|a|·b_norm), 0.0 where that divisor is 0 or ``a`` is
+    NULL; ``b_norm=None`` for a unit ``b``. |a| is folded once and bound
+    as the finish lambda's argument, used twice (zero test, divisor)."""
+
     def finish(n2: Column) -> Column:
-        denom = F.sqrt(n2) * b_norm
+        denom = F.sqrt(n2) if b_norm is None else F.sqrt(n2) * b_norm
         return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
     return F.when(a.isNull(), F.lit(0.0)).otherwise(
@@ -240,50 +170,33 @@ def _cosine_by(a: Column, b: Column, b_norm: Column) -> Column:
     )
 
 
-def topk_score(
-    a: Column | str,
-    b: Column | str | Sequence[float],
-    metric: str = "cosine",
-    b_norm: str | None = None,
-    positive_only: bool = True,
-) -> Column:
-    """The score of a similarity-desc top-k: true cosine, or with
-    ``metric="dot"`` the reference's raw dot (embeddings.rs:365;
-    SURVEY.md §7.4.2); ``b_norm`` as in :func:`cosine_similarity`.
+def topk_score(score: Column, positive_only: bool = True) -> Column:
+    """``[score]``, or ``[]`` for a row a similarity-desc top-k must not
+    return; explode it (``F.explode``) into the ranked column.
 
-    NULL for a row the top-k must not return. Spark's float order puts
-    NaN above +Infinity and takes ``NaN > 0`` as true, so a NaN score (a
-    NaN component, or an Inf row under cosine) would rank first; it is
-    NULL. ``positive_only`` adds the reference's keep-rule ``score > 0``
-    (embeddings.rs:366, where Rust's ``NaN > 0.0`` is false); +Inf
-    stays, as in the reference. Rank with NULLs last, take k, then drop
-    the NULLs: a filter on the score placed BEFORE the top-k is pushed
-    below the projection with the score inlined, once per comparison, so
-    each row would compute the kernel three times. The keep test reads
-    the score through ``_let``, so the kernel runs once."""
-    keep = "s > 0 AND NOT isnan(s)" if positive_only else "NOT isnan(s)"
-    text = _dot_text(a, b) if metric == "dot" else _cosine_text(a, b, b_norm)
-    if text:  # _let as SQL text
-        return F.expr(
-            f"aggregate(array(), {text}, (acc, x) -> acc, s -> CASE WHEN {keep} THEN s END)"
-        )
-    score = dot(a, b) if metric == "dot" else _cosine(a, b, b_norm)
+    Spark's float order puts NaN above +Infinity and takes ``NaN > 0`` as
+    true, so a NaN score (a NaN component, or an Inf row under cosine)
+    would rank first; it is dropped. ``positive_only`` adds the reference's
+    keep-rule ``score > 0`` (embeddings.rs:366, where Rust's ``NaN > 0.0``
+    is false); +Inf stays, as in the reference.
 
-    def body(s: Column) -> Column:
+    An array to explode rather than a value to filter on: Catalyst pushes
+    a filter on a computed column below the projection with the
+    expression inlined, so the kernel would run in the filter and again in
+    the projection, and a filter placed above the top-k instead stops
+    ``TakeOrderedAndProject`` from being the plan's root, which adds a
+    shuffle stage. The explode drops the row where the score is computed,
+    once."""
+
+    def keep(s: Column) -> Column:
         ok = ~F.isnan(s)
-        return F.when((s > 0) & ok if positive_only else ok, s)
+        return (s > 0) & ok if positive_only else ok
 
-    return _let(score, body)
+    return F.filter(F.array(score), keep)
 
 
 def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Euclidean distance (reference KdTree metric, embeddings.rs:402-408)."""
-    sa, sb = _sql(a), _sql(b)
-    if sa and sb:
-        return F.expr(
-            f"sqrt(aggregate(zip_with(CAST({sa} AS ARRAY<DOUBLE>), {sb}, "
-            "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x))"
-        )
     return F.sqrt(
         F.aggregate(
             F.zip_with(_col(a).cast("array<double>"), _col(b), lambda x, y: (x - y) * (x - y)),

@@ -16,7 +16,12 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from valentinus_spark.functions.vector import l2_distance, topk_score
+from valentinus_spark.functions.vector import (
+    cosine_similarity,
+    dot,
+    l2_distance,
+    topk_score,
+)
 
 
 def cosine_topk(
@@ -37,15 +42,18 @@ def cosine_topk(
     to the scan by Catalyst). NaN scores never rank and
     ``keep_positive_only`` is the reference's ``score > 0`` keep-rule,
     both through ``topk_score`` as in ``EmbeddingCollection.cosine_query``."""
+    score = (
+        dot(vec_col, query_vector)
+        if metric == "dot"
+        else cosine_similarity(vec_col, query_vector)
+    )
     out = df
     if pred is not None:
         out = out.filter(pred)
-    score = topk_score(vec_col, query_vector, metric, positive_only=keep_positive_only)
     return (
-        out.withColumn("similarity", score)
+        out.withColumn("similarity", F.explode(topk_score(score, keep_positive_only)))
         .orderBy(F.desc("similarity"), F.asc(id_col))
         .limit(k)
-        .filter("similarity IS NOT NULL")
     )
 
 
