@@ -649,3 +649,137 @@ def test_vacuum_removes_orphans_keeps_live_index(spark, fresh_warehouse):
     assert col.df.count() == 10
     # the live index still answers queries after vacuum
     assert col.nearest_query_approx("doc 3 alpha beta", k=1).count() == 1
+
+
+# ---------------- write bookkeeping: recorded schema, observed row counts ----
+
+_ROWS = "id string, document string, metadata map<string,string>"
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        {"promote_keys": {"Year": "int", "Lang": "string"}, "partition_by": ["md_Lang"]},
+        {"quantize": True},
+    ],
+    ids=["partitioned", "quantized"],
+)
+def test_n_rows_matches_the_table_after_every_write(spark, fresh_warehouse, layout):
+    """n_rows comes from an observation on each write (rows written by save
+    and upsert, old count plus rows appended by append), not from counting
+    the table again: it must still equal the table's row count."""
+    docs = [f"document {i} about {i % 4}" for i in range(12)]
+    metas = [{"Year": 2000 + i % 3, "Lang": "en" if i % 2 else "de"} for i in range(12)]
+    col = EmbeddingCollection.new(
+        spark, docs, metas, None, "counted", embedder=HashEmbedder(dim=16)
+    ).save(**layout)
+
+    def n_rows():
+        n = col.catalog.resolve(col.view)["n_rows"]
+        assert n == col.df.count() == EmbeddingCollection.find(spark, view=col.view).df.count()
+        return n
+
+    assert n_rows() == 12
+    col.append(spark.createDataFrame(
+        [("a1", "appended one", {"Year": "2001", "Lang": "en"}), ("a2", "appended two", None)], _ROWS
+    ))
+    assert n_rows() == 14
+    col.upsert(spark.createDataFrame(
+        [("id0", "replaced zero", {"Year": "2002", "Lang": "de"}), ("u1", "inserted", None)], _ROWS
+    ))
+    assert n_rows() == 15
+    assert {r["id"]: r["document"] for r in col.df.collect()}["id0"] == "replaced zero"
+
+
+def test_save_records_the_schema_spark_reads_back(spark, fresh_warehouse):
+    col = EmbeddingCollection.new(
+        spark, [f"doc {i}" for i in range(6)], [{"Year": 2000 + i % 2} for i in range(6)],
+        None, "schemed", embedder=HashEmbedder(dim=8),
+    ).save(promote_keys={"Year": "int"}, partition_by=["md_Year"])
+    entry = col.catalog.resolve(col.view)
+    inferred = spark.read.parquet(entry["path"]).schema
+    assert entry["schema"] == inferred.jsonValue()
+    assert col.df.schema == inferred
+    assert EmbeddingCollection.find(spark, view=col.view).df.schema == inferred
+
+
+def test_find_infers_the_schema_of_an_entry_without_one(spark, fresh_warehouse):
+    """A catalog entry written before the schema was recorded still loads,
+    queries and takes appends."""
+    col = EmbeddingCollection.new(
+        spark, [f"doc {i} words" for i in range(8)], [{"Year": 2000 + i % 2} for i in range(8)],
+        None, "legacy", embedder=HashEmbedder(dim=8),
+    ).save(promote_keys={"Year": "int"}, partition_by=["md_Year"])
+    entry = col.catalog.resolve(col.view)
+    del entry["schema"]
+    col.catalog.add(col.view, entry)
+
+    found = EmbeddingCollection.find(spark, view=col.view)
+    assert found.df.schema == col.df.schema
+    assert found.df.count() == 8
+    top = found.cosine_query("doc 3 words", num_results=1, f_where=[{"Year": {"eq": 2001}}]).first()
+    assert top["id"] == "id3"
+    found.append(spark.createDataFrame([("n1", "new doc", {"Year": "2001"})], _ROWS))
+    assert found.catalog.resolve(found.view)["n_rows"] == found.df.count() == 9
+
+
+def test_append_runs_one_spark_job(spark, fresh_warehouse):
+    """An append is its write: no schema-inference job for the re-read, no
+    count jobs for the row count."""
+    import uuid
+
+    col = EmbeddingCollection.new(
+        spark, [f"doc {i}" for i in range(10)], [{"Year": 2000 + i % 2} for i in range(10)],
+        None, "onejob", embedder=HashEmbedder(dim=8),
+    ).save(promote_keys={"Year": "int"}, partition_by=["md_Year"])
+    batch = spark.createDataFrame([(f"n{i}", f"new doc {i}", {"Year": "2001"}) for i in range(5)], _ROWS)
+    sc = spark.sparkContext
+    group = f"append-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one append")
+    try:
+        col.append(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed by the listener bus
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert col.catalog.resolve(col.view)["n_rows"] == 15
+
+
+def test_stream_append_keeps_saved_rows_and_replays_exactly_once(spark, fresh_warehouse, tmp_path):
+    """Streamed micro-batches go through append(): the saved rows stay
+    visible, the streamed row gets its promoted column and the row count,
+    and a batch the stream replays is not appended twice."""
+    docs = [f"saved document {i}" for i in range(10)]
+    col = EmbeddingCollection.new(
+        spark, docs, [{"Year": 2000 + i} for i in range(10)], None, "streamed",
+        embedder=HashEmbedder(dim=16),
+    ).save(promote_keys={"Year": "int"})
+    src = str(tmp_path / "stream_in")
+    spark.createDataFrame([("idS", "a streamed document", {"Year": "2024"})], _ROWS).write.parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+
+    def run_stream():
+        q = col.stream_append(spark.readStream.schema(_ROWS).parquet(src), ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    def stored():
+        found = EmbeddingCollection.find(spark, view=col.view)
+        return {r["id"]: r for r in found.df.collect()}, found.catalog.resolve(col.view)["n_rows"]
+
+    run_stream()
+    rows, n_rows = stored()
+    assert len(rows) == n_rows == 11
+    assert rows["idS"]["md_Year"] == 2024
+    assert rows["id3"]["md_Year"] == 2003
+    assert col.cosine_query("a streamed document", num_results=1).first()["id"] == "idS"
+
+    run_stream()  # same checkpoint, nothing new
+    assert stored()[1] == 11 and len(stored()[0]) == 11
+    # forget that batch 0 committed: the stream replays it, the catalog skips it
+    for name in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(ckpt, "commits", name)):
+            os.remove(os.path.join(ckpt, "commits", name))
+    run_stream()
+    rows, n_rows = stored()
+    assert len(rows) == n_rows == 11

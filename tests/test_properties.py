@@ -9264,6 +9264,22 @@ def test_dhash_bits_matches_python_and_brightness_invariant(dims, data, shift):
     assert dhash_bits(rgb) == got
 
 
+def test_dhash_bits_rgb_equals_gray_where_float_luma_ties_flip():
+    """Float BT.601 weights do not sum to exactly 1, so two equal grid
+    cells of an equal-channel RGB image once compared unequal (the RGB
+    hash read 1125899906842816 against 1125899906842752 for grayscale)."""
+    import numpy as np
+
+    from valentinus_spark.operators.media_dedup import dhash_bits
+
+    arr = np.zeros((9, 10), dtype=np.uint8)
+    for (y, x), v in {(1, 6): 3, (5, 0): 7, (7, 1): 2, (8, 1): 1, (8, 2): 3}.items():
+        arr[y, x] = v
+    got = dhash_bits(arr)
+    assert got == _dhash_py([float(p) for p in arr.reshape(-1)], 9, 10) == 1125899906842752
+    assert dhash_bits(np.stack([arr, arr, arr], axis=2)) == got
+
+
 @settings(max_examples=hypo_examples(10), deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     dims=st.tuples(

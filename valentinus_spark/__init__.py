@@ -25,21 +25,30 @@ Public API (mirrors reference `pub` items, SURVEY.md §2.5):
   operators beyond the reference surface (BASELINE.json north star)
 """
 
-from valentinus_spark.collection import EmbeddingCollection, CollectionCatalog
-from valentinus_spark.embed import HashEmbedder, OnnxEmbedder, get_embedder
-from valentinus_spark.errors import ValentinusError
-from valentinus_spark.filters import compile_filters
-from valentinus_spark.session import get_spark
+import importlib
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "EmbeddingCollection",
-    "CollectionCatalog",
-    "HashEmbedder",
-    "OnnxEmbedder",
-    "get_embedder",
-    "ValentinusError",
-    "compile_filters",
-    "get_spark",
-]
+# public name -> defining module, imported on first access (PEP 562): the
+# worker daemon (valentinus_spark._daemon) runs under this package, and
+# every forked Python worker inherits what the daemon imported
+_EXPORTS = {
+    "EmbeddingCollection": "collection",
+    "CollectionCatalog": "collection",
+    "HashEmbedder": "embed",
+    "OnnxEmbedder": "embed",
+    "get_embedder": "embed",
+    "ValentinusError": "errors",
+    "compile_filters": "filters",
+    "get_spark": "session",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value

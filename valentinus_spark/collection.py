@@ -36,7 +36,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Any, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -71,6 +71,46 @@ VALID_NAME = re.compile(r"^[a-zA-Z0-9_]+$")
 # index artifacts written next to a collection's data path (path + suffix)
 ANN_SIDECARS = ("_ann", "_ann_model")
 PQ_SIDECARS = ("_pq", "_pq_books.json")
+
+
+def _write_table(
+    df: DataFrame, path: str, partition_by: Sequence[str] | None, mode: str = "errorifexists"
+) -> int:
+    """Write ``df`` as Parquet in the collection's layout and return the
+    rows written, observed on the write itself rather than counted by a
+    second job."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    if partition_by:
+        # keep the Hive-partitioned layout — a flat write would drop files at
+        # the table root and break partition pruning for every later read
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return obs.get["rows"]
+
+
+def _read_table(spark: SparkSession, entry: dict, *files: str) -> DataFrame:
+    """Read a collection's table (or just ``files`` of it) with the schema
+    its catalog entry records: no schema-inference job. A legacy entry
+    without one is inferred."""
+    reader = spark.read
+    if entry.get("schema"):
+        reader = reader.schema(StructType.fromJson(entry["schema"]))
+    if files:
+        # basePath keeps Hive partition columns alive when reading leaf
+        # files of a partitioned layout directly
+        return reader.option("basePath", entry["path"]).parquet(*files)
+    return reader.parquet(entry["path"])
+
+
+def _local_frame(spark: SparkSession, qvs: list[list[float]], qid_type: str) -> DataFrame:
+    """(qid, qvec) probe table as a LocalRelation: built through Arrow from
+    pandas, so evaluating it runs no job and no Python task (a list
+    argument becomes a Python RDD, one Python task per partition)."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({"qid": range(len(qvs)), "qvec": qvs})
+    return spark.createDataFrame(pdf, f"qid {qid_type}, qvec array<double>")
 
 
 def _mark_indexes_stale(entry: dict) -> None:
@@ -321,11 +361,14 @@ class EmbeddingCollection:
         if sort_by:
             df = df.sortWithinPartitions(*sort_by)
         path = self.catalog.data_path(self.view)
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        persisted = self.spark.read.parquet(path)
+        n_rows = _write_table(df, path, partition_by)
+        # partition columns come back last (and the reader makes every
+        # column nullable); recorded so that no later read infers it again
+        parts = list(partition_by or [])
+        layout = StructType(
+            [f for f in df.schema.fields if f.name not in parts] + [df.schema[c] for c in parts]
+        )
+        persisted = self.spark.read.schema(layout).parquet(path)
         self.catalog.add(
             self.view,
             {
@@ -342,55 +385,69 @@ class EmbeddingCollection:
                 "promoted": promote,
                 # layout spec: append()/compact() re-apply it so the
                 # Hive-partitioned directory structure survives rewrites
-                "partition_by": list(partition_by) if partition_by else [],
-                "n_rows": persisted.count(),
+                "partition_by": parts,
+                "schema": persisted.schema.jsonValue(),
+                "n_rows": n_rows,
             },
         )
         self.df = persisted
         return self
 
-    def append(self, df: DataFrame) -> "EmbeddingCollection":
-        """Batch-append rows to a SAVED collection: embed documents that
-        lack vectors, append to the Parquet path, refresh the manifest
-        row count. The batch twin of stream_collection_append (same
-        append-only layout, so both can feed one collection; run
-        compact() periodically if appends are small). Quantized
-        collections quantize the new vectors the same way."""
+    def _prepare_batch(self, df: DataFrame, entry: dict) -> DataFrame:
+        """Incoming rows in the stored table's columns: embed documents that
+        lack vectors (quantized like the table), derive the promoted
+        ``md_<key>`` columns from the catalog's promotion spec, NULL-fill
+        the rest."""
+        from valentinus_spark.filters import PROMOTED_PREFIX
         from valentinus_spark.functions.vector import quantize_embedding
 
-        entry = self.catalog.resolve(self.view)  # raises if never saved
         if "metadata" not in df.columns:
             df = df.withColumn(
                 "metadata", F.lit(None).cast(MapType(StringType(), StringType()))
             )
-        quantized = "embedding_q" in self.df.columns
         if "embedding" not in df.columns and "embedding_q" not in df.columns:
             df = df.withColumn("embedding", self.embedder.embed_col("document"))
-        if quantized and "embedding_q" not in df.columns:
+        if "embedding_q" in self.df.columns and "embedding_q" not in df.columns:
             df = df.withColumn("embedding_q", quantize_embedding("embedding")).drop(
                 "embedding"
             )
-        from valentinus_spark.filters import PROMOTED_PREFIX
-
         for pkey, ptype in (entry.get("promoted") or {}).items():
             pcol = PROMOTED_PREFIX + pkey
             if pcol not in df.columns:
                 df = df.withColumn(
                     pcol, F.element_at("metadata", pkey).try_cast(ptype)
                 )
+        dtypes = dict(self.df.dtypes)
         for col_name in self.df.columns:
             if col_name not in df.columns:
-                df = df.withColumn(
-                    col_name, F.lit(None).cast(dict(self.df.dtypes)[col_name])
-                )
-        writer = df.select(self.df.columns).write.mode("append")
-        if entry.get("partition_by"):
-            # preserve the Hive-partitioned layout — an unpartitioned append
-            # would drop files at the table root and break partition pruning
-            writer = writer.partitionBy(*entry["partition_by"])
-        writer.parquet(entry["path"])
-        self.df = self.spark.read.parquet(entry["path"])
-        entry["n_rows"] = self.df.count()
+                df = df.withColumn(col_name, F.lit(None).cast(dtypes[col_name]))
+        return df.select(self.df.columns)
+
+    def append(self, df: DataFrame) -> "EmbeddingCollection":
+        """Batch-append rows to a SAVED collection: embed documents that
+        lack vectors, append to the Parquet path in the saved layout,
+        advance the manifest row count by the rows written. The batch twin
+        of :meth:`stream_append`, which feeds its micro-batches through
+        here; run compact() periodically if appends are small. Quantized
+        collections quantize the new vectors the same way. One Spark job:
+        the write."""
+        return self._append(df)
+
+    def _append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> "EmbeddingCollection":
+        """``append``; ``txn=(app_id, version)`` makes it idempotent per
+        writer, the way Delta's ``txnAppId``/``txnVersion`` do: a version
+        the catalog already records for ``app_id`` is skipped, and the
+        version is recorded in the same manifest write as the row count."""
+        entry = self.catalog.resolve(self.view)  # raises if never saved
+        if txn is not None and entry.get("txns", {}).get(txn[0], -1) >= txn[1]:
+            return self
+        written = _write_table(
+            self._prepare_batch(df, entry), entry["path"], entry.get("partition_by"), mode="append"
+        )
+        self.df = _read_table(self.spark, entry)
+        entry["n_rows"] = entry["n_rows"] + written if "n_rows" in entry else self.df.count()
+        if txn is not None:
+            entry.setdefault("txns", {})[txn[0]] = txn[1]
         _mark_indexes_stale(entry)
         self.catalog.add(self.view, entry)
         return self
@@ -422,49 +479,20 @@ class EmbeddingCollection:
         )
         if dup.limit(1).count() > 0:
             raise BatchError("upsert batch contains duplicate ids")
-        if "metadata" not in df.columns:
-            df = df.withColumn(
-                "metadata", F.lit(None).cast(MapType(StringType(), StringType()))
-            )
-        from valentinus_spark.functions.vector import quantize_embedding
-
-        quantized = "embedding_q" in self.df.columns
-        if "embedding" not in df.columns and "embedding_q" not in df.columns:
-            df = df.withColumn("embedding", self.embedder.embed_col("document"))
-        if quantized and "embedding_q" not in df.columns:
-            df = df.withColumn("embedding_q", quantize_embedding("embedding")).drop(
-                "embedding"
-            )
-        from valentinus_spark.filters import PROMOTED_PREFIX
-
-        for pkey, ptype in (entry.get("promoted") or {}).items():
-            pcol = PROMOTED_PREFIX + pkey
-            if pcol not in df.columns:
-                df = df.withColumn(
-                    pcol, F.element_at("metadata", pkey).try_cast(ptype)
-                )
-        for col_name in self.df.columns:
-            if col_name not in df.columns:
-                df = df.withColumn(
-                    col_name, F.lit(None).cast(dict(self.df.dtypes)[col_name])
-                )
-        batch = df.select(self.df.columns)
+        batch = self._prepare_batch(df, entry)
         survivors = self.df.join(batch.select("id"), "id", "anti")
-        merged = survivors.unionByName(batch)
         path = entry["path"]
         tmp = path + ".upsert.tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        writer = merged.write
-        if entry.get("partition_by"):
-            writer = writer.partitionBy(*entry["partition_by"])
-        writer.parquet(tmp)
+        entry["n_rows"] = _write_table(
+            survivors.unionByName(batch), tmp, entry.get("partition_by")
+        )
         old = path + ".upsert.old"
         os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old)
-        self.df = self.spark.read.parquet(path)
-        entry["n_rows"] = self.df.count()
+        self.df = _read_table(self.spark, entry)
         _mark_indexes_stale(entry)
         self.catalog.add(self.view, entry)
         return self
@@ -486,7 +514,7 @@ class EmbeddingCollection:
         output files (default: session defaultParallelism).
 
         The small-files problem is the storage-side skew of streaming
-        ingest: stream_collection_append writes a file per micro-batch
+        ingest: stream_append writes a file per micro-batch
         per partition, and a year of that makes every scan pay per-file
         open/footer costs. Periodic compaction is the standard fix (what
         Delta's OPTIMIZE does). Rewrites to a temp dir then swaps, so a
@@ -497,17 +525,14 @@ class EmbeddingCollection:
         tmp = path + ".compact.tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        writer = self.spark.read.parquet(path).repartition(n).write
-        if entry.get("partition_by"):
-            # re-apply the layout spec — a flat rewrite would silently drop
-            # partition pruning for every subsequent read
-            writer = writer.partitionBy(*entry["partition_by"])
-        writer.parquet(tmp)
+        _write_table(
+            _read_table(self.spark, entry).repartition(n), tmp, entry.get("partition_by")
+        )
         old = path + ".compact.old"
         os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old)
-        self.df = self.spark.read.parquet(path)
+        self.df = _read_table(self.spark, entry)
         return self
 
     # ------------- concurrent-append-safe compaction + vacuum -------------
@@ -551,16 +576,14 @@ class EmbeddingCollection:
         if not snapshot:
             return self
         n = target_files or self.spark.sparkContext.defaultParallelism
-        # basePath keeps Hive partition columns alive when reading leaf
-        # files of a partitioned layout directly
-        src = self.spark.read.option("basePath", path).parquet(*snapshot)
         tmp = f"{path}.compact-{plan['token']}"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        writer = src.repartition(n).write
-        if entry.get("partition_by"):
-            writer = writer.partitionBy(*entry["partition_by"])
-        writer.parquet(tmp)
+        _write_table(
+            _read_table(self.spark, entry, *snapshot).repartition(n),
+            tmp,
+            entry.get("partition_by"),
+        )
         # move compacted part-files in (preserving partition subdirs),
         # names prefixed with the plan token so they cannot collide with
         # concurrent appends' part files
@@ -583,7 +606,7 @@ class EmbeddingCollection:
             if os.path.exists(crc):
                 os.remove(crc)
         shutil.rmtree(tmp)
-        self.df = self.spark.read.parquet(path)
+        self.df = _read_table(self.spark, entry)
         return self
 
     def compact_safe(self, target_files: int | None = None) -> "EmbeddingCollection":
@@ -656,7 +679,7 @@ class EmbeddingCollection:
             entry = catalog.resolve(view)
         else:
             raise NotFoundError("find() requires key or view")
-        df = spark.read.parquet(entry["path"])
+        df = _read_table(spark, entry)
         conf = entry.get("embedder_conf")
         if conf is None:  # legacy entry: only name+dim were recorded
             conf = {"dim": entry.get("dim", 384)}
@@ -789,9 +812,7 @@ class EmbeddingCollection:
         qvs = [[float(x) for x in v] for v in self.embedder.embed_texts(list(query_strings))]
         if metric != "dot":  # normalized here, once, not per row and probe
             qvs = [unit_vector(v) for v in qvs]
-        queries = self.spark.createDataFrame(
-            list(enumerate(qvs)), "qid int, qvec array<double>"
-        )
+        queries = _local_frame(self.spark, qvs, "int")
         vec = self._vec()
         sim = dot(vec, "qvec") if metric == "dot" else unit_cosine(vec, "qvec")
         base = self.df.filter(
@@ -978,7 +999,7 @@ class EmbeddingCollection:
             df = df.withColumn("embedding", self._vec())
         corpus = df.join(codes, "id")
         qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
-        queries = self.spark.createDataFrame([(0, qv)], "qid long, qvec array<double>")
+        queries = _local_frame(self.spark, [qv], "long")
         out = pq_ann_topk_refined(
             corpus, queries, books, k=k, shortlist_factor=shortlist_factor,
             corpus_id="id", corpus_vec="embedding",
@@ -991,18 +1012,27 @@ class EmbeddingCollection:
 
     def stream_append(self, docs_stream: DataFrame, checkpoint: str,
                       text_col: str = "document"):
-        """Streaming twin of append(): embed + append micro-batches to this
-        SAVED collection's path (streaming/pipeline.py does the plumbing).
-        Marks any built ANN or PQ index stale up front — appended rows are
-        not in the persisted hash table or codes. Returns the
-        StreamingQuery."""
-        from valentinus_spark.streaming.pipeline import stream_collection_append
+        """Streaming twin of append(): every micro-batch of ``docs_stream``
+        (id, document[, metadata] rows) goes through :meth:`append`, so it
+        gets the saved layout, promoted columns, the row count and stale
+        index marks like a batch append. Replays are exactly-once: the
+        catalog records the last batch id appended per checkpoint, and a
+        batch the stream replays after a failure is skipped. ``text_col``
+        names the column to embed when it is not ``document``. Returns the
+        StreamingQuery (trigger availableNow)."""
+        self.catalog.resolve(self.view)  # raises if never saved
+        app_id = os.path.abspath(checkpoint)
 
-        entry = self.catalog.resolve(self.view)
-        _mark_indexes_stale(entry)
-        self.catalog.add(self.view, entry)
-        return stream_collection_append(
-            docs_stream, self.embedder, entry["path"], checkpoint, text_col
+        def append_batch(batch: DataFrame, batch_id: int) -> None:
+            if text_col != "document" and "embedding" not in batch.columns:
+                batch = batch.withColumn("embedding", self.embedder.embed_col(text_col))
+            self._append(batch, txn=(app_id, batch_id))
+
+        return (
+            docs_stream.writeStream.foreachBatch(append_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
         )
 
     def _load_ann(self):

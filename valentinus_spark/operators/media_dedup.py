@@ -45,24 +45,33 @@ _DHASH_SCHEMA = StructType(
 
 def dhash_bits(arr: np.ndarray, hash_w: int = 8, hash_h: int = 8) -> int:
     """uint8 (h, w[, c]) image → dHash as an int of hash_w*hash_h bits.
-    Luma via the BT.601 weights the codecs' YCbCr conversion uses; the
+    Luma via the BT.601 weights the codecs' YCbCr conversion uses, in
+    integers (299R + 587G + 114B; grayscale scaled by 1000), so an RGB
+    image with equal channels hashes exactly like its grayscale image; the
     downscale is area-averaging over an even grid (deterministic, no
-    resampling library)."""
+    resampling library), and neighbouring cells compare by exact integer
+    cross-multiplication of their sums and sizes."""
     if arr.ndim == 3:
-        a = arr[:, :, :3].astype(np.float64)
-        luma = 0.299 * a[:, :, 0] + 0.587 * a[:, :, 1] + 0.114 * a[:, :, 2]
+        a = arr[:, :, :3].astype(np.int64)
+        luma = 299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]
     else:
-        luma = arr.astype(np.float64)
+        luma = arr.astype(np.int64) * 1000
     h, w = luma.shape
     gw, gh = hash_w + 1, hash_h
     ys = (np.arange(gh + 1) * h) // gh
     xs = (np.arange(gw + 1) * w) // gw
-    grid = np.empty((gh, gw))
+    sums = [[0] * gw for _ in range(gh)]
+    sizes = [[0] * gw for _ in range(gh)]
     for i in range(gh):
         for j in range(gw):
             cell = luma[ys[i] : max(ys[i + 1], ys[i] + 1), xs[j] : max(xs[j + 1], xs[j] + 1)]
-            grid[i, j] = cell.mean()
-    bits = (grid[:, 1:] > grid[:, :-1]).reshape(-1)
+            sums[i][j], sizes[i][j] = int(cell.sum()), cell.size
+    # mean(right) > mean(left), in Python ints: no float rounding, no overflow
+    bits = [
+        sums[i][j + 1] * sizes[i][j] > sums[i][j] * sizes[i][j + 1]
+        for i in range(gh)
+        for j in range(gw - 1)
+    ]
     out = 0
     for b in bits:
         out = (out << 1) | int(b)

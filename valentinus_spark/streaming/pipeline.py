@@ -243,9 +243,13 @@ def stream_collection_append(
     checkpoint: str,
     text_col: str = "document",
 ):
-    """Incremental collection maintenance: stream of (id, document,
-    metadata) rows → embed (same pandas UDF as batch save) → append to the
-    collection's Parquet path. Returns the StreamingQuery.
+    """Incremental embedding ingest: stream of (id, document, metadata)
+    rows → embed (same pandas UDF as batch save) → Parquet file sink at
+    ``path``. Returns the StreamingQuery. The sink keeps its own
+    ``_spark_metadata`` log in ``path``, and Spark then reads ``path`` as
+    the sink's files only: never point it at a saved collection, whose
+    rows would vanish from every read — use
+    ``EmbeddingCollection.stream_append`` for that.
 
     At scale this is the continuous-ingest half of the engine: the LSH /
     IVF index rebuild stays a periodic batch job over the appended table
