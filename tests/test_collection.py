@@ -1,10 +1,12 @@
 """End-to-end collection lifecycle — the reference's own test scenarios
 (SURVEY.md §5): cosine_etl_test (embeddings.rs:588-669) on the real
-Tesla-review CSV, nearest_test (embeddings.rs:671-719) under the hash
+Tesla-review CSV (or, without the reference checkout, a synthetic CSV of
+its layout, tests/data/car_reviews_sample.csv), nearest_test (embeddings.rs:671-719) under the hash
 embedder with a numpy argmin-L2 oracle (FIXTURES.md F1/F2), plus catalog
 semantics (create/save/find/delete/list, view-name gates)."""
 
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -783,3 +785,75 @@ def test_stream_append_keeps_saved_rows_and_replays_exactly_once(spark, fresh_wa
     run_stream()
     rows, n_rows = stored()
     assert len(rows) == n_rows == 11
+
+
+# ---------------- concurrent catalog writers, swap-dir leftovers ------------
+
+
+def test_concurrent_catalog_adds_keep_every_entry(spark, fresh_warehouse):
+    """Two threads x 50 ``add``s: each read-modify-write holds the lock and
+    publishes through its own temp file, so the manifest stays parseable
+    and no thread drops another's entries."""
+    import json
+    import threading
+
+    catalog = CollectionCatalog(spark)
+    errors = []
+
+    def writer(t):
+        try:
+            for i in range(50):
+                catalog.add(f"view-t{t}_{i}", {"key": f"key-{t}-{i}", "path": "p"})
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert errors == []
+    with open(os.path.join(fresh_warehouse, "manifest.json")) as f:
+        manifest = json.load(f)
+    assert len(manifest) == 100
+    assert sorted(catalog.list_views()) == sorted(f"view-t{t}_{i}" for t in range(2) for i in range(50))
+    assert not [f for f in os.listdir(fresh_warehouse) if f.endswith(".tmp")]
+
+
+def _swap_leftovers(spark, name):
+    col = EmbeddingCollection.new(
+        spark, [f"doc {i} alpha" for i in range(8)], None, None, name,
+        embedder=HashEmbedder(dim=16),
+    ).save()
+    return col, col.catalog.resolve(f"view-{name}")["path"]
+
+
+def test_vacuum_removes_upsert_swap_dirs_beside_the_live_table(spark, fresh_warehouse):
+    col, path = _swap_leftovers(spark, "upsert_left")
+    os.makedirs(path + ".upsert.tmp")
+    os.makedirs(path + ".upsert.old")
+    base = os.path.basename(path)
+    audit = {(r["artifact"], r["kind"], r["action"]) for r in col.vacuum().collect()}
+    assert audit == {
+        (base + ".upsert.tmp", "swap_upsert_dir", "removed"),
+        (base + ".upsert.old", "swap_upsert_dir", "removed"),
+    }
+    assert not os.path.exists(path + ".upsert.tmp")
+    assert not os.path.exists(path + ".upsert.old")
+    assert col.df.count() == 8
+
+
+def test_vacuum_keeps_swap_dirs_that_hold_the_only_copy(spark, fresh_warehouse):
+    """A crash between a swap's two renames leaves the table only in the
+    swap dirs: vacuum reports them and deletes nothing."""
+    col, path = _swap_leftovers(spark, "upsert_crash")
+    shutil.copytree(path, path + ".upsert.tmp")
+    os.rename(path, path + ".upsert.old")
+    base = os.path.basename(path)
+    audit = {(r["artifact"], r["kind"], r["action"]) for r in col.vacuum().collect()}
+    assert audit == {
+        (base + ".upsert.tmp", "swap_upsert_dir", "kept"),
+        (base + ".upsert.old", "swap_upsert_dir", "kept"),
+    }
+    assert spark.read.parquet(path + ".upsert.old").count() == 8
+    assert spark.read.parquet(path + ".upsert.tmp").count() == 8

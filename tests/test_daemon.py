@@ -91,3 +91,35 @@ def test_archive_is_reread_only_when_changed(tmp_path, monkeypatch):
     assert importlib.import_module("vs_zip_second").Y == 2
     importlib.invalidate_caches()
     assert rereads.count(archive) == 1
+
+
+def test_python_workers_connect_over_a_short_unix_socket(spark):
+    """A local session's workers connect over a Unix socket in a private
+    directory whose socket paths fit the 108-byte address limit."""
+    assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    sock_dir = spark.conf.get("spark.python.unix.domain.socket.dir")
+    assert os.path.isdir(sock_dir)
+    assert spark.sparkContext.parallelize(range(4), 2).map(lambda x: x * x).sum() == 14
+    socks = [f for f in os.listdir(sock_dir) if f.endswith(".sock")]
+    assert socks
+    assert all(len(os.path.join(sock_dir, f)) < 108 for f in socks)
+
+
+def test_socket_dir_is_removed_when_the_session_stops(tmp_path):
+    from valentinus_spark.session import _remove_on_stop
+
+    class Session:
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    sock_dir = tmp_path / "vs-sock"
+    sock_dir.mkdir()
+    (sock_dir / ".left.sock").touch()
+    session = Session()
+    _remove_on_stop(session, str(sock_dir))
+    assert sock_dir.exists()
+    session.stop()
+    assert session.stopped
+    assert not sock_dir.exists()

@@ -158,9 +158,10 @@ def test_cosine_degenerate_queries(vec_rows, kind):
 
 def test_cosine_query_plan_holds_query_as_one_literal(spark, fresh_warehouse):
     """The query vector enters the plan as one literal (no CreateArray of
-    dim children), each row is scored once (no keep-rule filter for
-    Catalyst to push below the projection with the kernel inlined), and
-    the top-k is the plan's root, merged on the driver: no shuffle."""
+    dim children; the prepared kernel's ``_q`` column folded into it),
+    each row is scored once (no keep-rule filter for Catalyst to push
+    below the projection with the kernel inlined), and the top-k is the
+    plan's root, merged on the driver: no shuffle."""
     from valentinus_spark.collection import EmbeddingCollection
     from valentinus_spark.embed import HashEmbedder
 
@@ -169,6 +170,8 @@ def test_cosine_query_plan_holds_query_as_one_literal(spark, fresh_warehouse):
         spark, [f"doc {i} words" for i in range(6)], [{"Year": 2000 + i} for i in range(6)],
         None, "planlit", embedder=HashEmbedder(dim=dim),
     ).save(promote_keys={"Year": "int"})
+    # a first query prepares the kernel: the plan below binds a new vector to it
+    col.cosine_query("words", num_results=1).collect()
     df = col.cosine_query("doc words", num_results=3, f_where=[{"Year": {"gte": 2001}}])
     assert df.count() > 0
     qe = df._jdf.queryExecution()
@@ -179,6 +182,8 @@ def test_cosine_query_plan_holds_query_as_one_literal(spark, fresh_warehouse):
     optimized = qe.optimizedPlan().toString()
     assert "from_json" not in optimized  # constant-folded to one array literal
     assert optimized.count("zip_with(") == 1
+    assert "_q#" not in optimized  # the bound query column is inlined
+    assert len(re.findall(r"\[(?:[-\d.E]+,){%d}[-\d.E]+\]" % (dim - 1), optimized)) == 1
     physical = qe.executedPlan().toString()
     assert "TakeOrderedAndProject" in physical.splitlines()[0]
     assert "Exchange" not in physical

@@ -28,11 +28,13 @@ transaction log); the DATA plane never touches the driver.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import re
 import shutil
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any, Iterable, Sequence
 
@@ -56,13 +58,12 @@ from valentinus_spark.errors import (
 )
 from valentinus_spark.filters import compile_filters
 from valentinus_spark.functions.vector import (
-    cosine_similarity,
-    dot,
-    l2_distance,
-    topk_score,
-    unit_cosine,
+    dequantize_embedding,
+    prepared_kernel,
+    quantize_embedding,
     unit_vector,
 )
+from valentinus_spark.operators.query import cosine_topk, nearest_topk
 from valentinus_spark.session import warehouse_dir
 
 # reference view-name gate (embeddings.rs:107-109)
@@ -187,10 +188,26 @@ class CollectionCatalog:
             return json.load(f)
 
     def _write(self, manifest: dict[str, dict]) -> None:
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp, tmp[: -len(".tmp")])
+        """Publish ``manifest`` by atomic rename of a temp file of this
+        write's own: a shared temp name lets a concurrent writer rename or
+        truncate another's half-written file."""
+        tmp = f"{self._manifest_path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(manifest, f, indent=2, sort_keys=True)
+            os.replace(tmp, self._manifest_path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+
+    @contextmanager
+    def _locked(self):
+        """Exclusive lock on the warehouse's ``manifest.json.lock``, held
+        around each read-modify-write of the manifest so that concurrent
+        writers, threads or processes, never drop each other's entries."""
+        with open(self._manifest_path + ".lock", "a") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)
+            yield  # closing the file releases the lock
 
     # ≈ fetch_collection_keys(views=False/True) (embeddings.rs:312-324)
     def list_keys(self) -> list[str]:
@@ -212,15 +229,17 @@ class CollectionCatalog:
         raise NotFoundError(f"no collection with key {key!r}")
 
     def add(self, view: str, entry: dict) -> None:
-        m = self._read()
-        m[view] = entry
-        self._write(m)
+        with self._locked():
+            m = self._read()
+            m[view] = entry
+            self._write(m)
 
     def remove(self, view: str) -> None:
-        m = self._read()
-        if view in m:
-            del m[view]
-            self._write(m)
+        with self._locked():
+            m = self._read()
+            if view in m:
+                del m[view]
+                self._write(m)
 
     def data_path(self, view: str) -> str:
         return os.path.join(self.warehouse, "collections", view)
@@ -339,7 +358,6 @@ class EmbeddingCollection:
         shuffle); queries dequantize transparently, and cosine ranking
         is scale-invariant so recall loss is rounding-noise only."""
         from valentinus_spark.filters import PROMOTED_PREFIX
-        from valentinus_spark.functions.vector import quantize_embedding
 
         df = self.df
         if "embedding" not in df.columns and "embedding_q" not in df.columns:
@@ -399,7 +417,6 @@ class EmbeddingCollection:
         ``md_<key>`` columns from the catalog's promotion spec, NULL-fill
         the rest."""
         from valentinus_spark.filters import PROMOTED_PREFIX
-        from valentinus_spark.functions.vector import quantize_embedding
 
         if "metadata" not in df.columns:
             df = df.withColumn(
@@ -619,24 +636,32 @@ class EmbeddingCollection:
         """Remove orphaned storage artifacts of this collection and
         return the audit as a DataFrame ``(artifact, kind, action)``.
 
-        Orphans accrue from crashed maintenance jobs: ``compact()``'s
-        swap dirs (``.compact.tmp``/``.compact.old``), abandoned
-        two-phase staging dirs (``.compact-<token>``), and ANN/PQ index
-        sidecars whose catalog flag was since dropped (an index rebuilt
-        under a different name, or a manifest restored from backup).
-        LIVE index sidecars — ones the catalog still references — are
-        never touched. Data files are never touched (duplicate-row
-        repair after a crashed commit is ``compact_safe()``'s job, not
-        vacuum's). ``dry_run=True`` audits without deleting."""
+        Orphans accrue from crashed maintenance jobs: the swap dirs of
+        ``compact()`` (``.compact.tmp``/``.compact.old``) and of
+        ``upsert`` (``.upsert.tmp``/``.upsert.old``), abandoned two-phase
+        staging dirs (``.compact-<token>``), and ANN/PQ index sidecars
+        whose catalog flag was since dropped (an index rebuilt under a
+        different name, or a manifest restored from backup). A swap dir
+        is removed only while the collection's own path exists: a crash
+        between a swap's two renames leaves the data ONLY in the swap
+        dirs, and those are then kept (action ``kept``). LIVE index
+        sidecars — ones the catalog still references — are never touched.
+        Data files are never touched (duplicate-row repair after a crashed
+        commit is ``compact_safe()``'s job, not vacuum's). ``dry_run=True``
+        audits without deleting."""
         entry = self.catalog.resolve(self.view)
         path = entry["path"]
         base = os.path.dirname(path)
         name = os.path.basename(path)
+        swaps = {
+            name + suffix: kind
+            for kind, op in (("swap_compaction_dir", "compact"), ("swap_upsert_dir", "upsert"))
+            for suffix in (f".{op}.tmp", f".{op}.old")
+        }
         found: list[tuple[str, str]] = []
         for d in sorted(os.listdir(base)):
-            full = os.path.join(base, d)
-            if d in (name + ".compact.tmp", name + ".compact.old"):
-                found.append((d, "swap_compaction_dir"))
+            if d in swaps:
+                found.append((d, swaps[d]))
             elif d.startswith(name + ".compact-"):
                 found.append((d, "staged_compaction_dir"))
             elif d in [name + x for x in ANN_SIDECARS] and not entry.get(
@@ -647,18 +672,19 @@ class EmbeddingCollection:
                 "pq_index"
             ):
                 found.append((d, "orphan_pq_sidecar"))
-        action = "would_remove" if dry_run else "removed"
-        if not dry_run:
-            for d, _kind in found:
-                full = os.path.join(base, d)
-                if os.path.isdir(full):
-                    shutil.rmtree(full)
-                else:
-                    os.remove(full)
-        return self.spark.createDataFrame(
-            [(d, kind, action) for d, kind in found],
-            "artifact string, kind string, action string",
-        )
+        live = os.path.exists(path)
+        audit = []
+        for d, kind in found:
+            keep = d in swaps and not live
+            audit.append((d, kind, "kept" if keep else "would_remove" if dry_run else "removed"))
+            full = os.path.join(base, d)
+            if keep or dry_run:
+                continue
+            if os.path.isdir(full):
+                shutil.rmtree(full)
+            else:
+                os.remove(full)
+        return self.spark.createDataFrame(audit, "artifact string, kind string, action string")
 
     # ---------------- load (S4, find, embeddings.rs:545-569) --------------
 
@@ -734,16 +760,21 @@ class EmbeddingCollection:
 
     # ---------------- queries (T4-T7) -------------------------------------
 
+    def _vec_col(self) -> tuple[str, bool]:
+        """The stored vector column, and whether it holds int8-quantized
+        structs (save(quantize=True)) that queries dequantize."""
+        names = self.df.columns
+        if "embedding" in names:
+            return "embedding", False
+        if "embedding_q" in names:
+            return "embedding_q", True
+        raise NotFoundError("collection has no embeddings — save() first")
+
     def _vec(self):
         """Vector expression: the float column, or transparent dequantize
-        of an int8-quantized collection (save(quantize=True))."""
-        from valentinus_spark.functions.vector import dequantize_embedding
-
-        if "embedding" in self.df.columns:
-            return F.col("embedding")
-        if "embedding_q" in self.df.columns:
-            return dequantize_embedding("embedding_q")
-        raise NotFoundError("collection has no embeddings — save() first")
+        of an int8-quantized collection."""
+        name, quantized = self._vec_col()
+        return dequantize_embedding(name) if quantized else F.col(name)
 
     def cosine_query(
         self,
@@ -754,13 +785,17 @@ class EmbeddingCollection:
         ordered: bool = True,
     ) -> DataFrame:
         """Metadata-filtered similarity scan (reference cosine_query,
-        embeddings.rs:334-382).
+        embeddings.rs:334-382), built by ``operators.query.cosine_topk``.
 
-        Plan: filter(metadata predicate) → generate(similarity, dropping
-        rows the keep-rule rejects) → TakeOrdered(k). Catalyst pushes the
-        compiled metadata predicate to the Parquet scan; each kept row is
-        scored once (``topk_score``); TakeOrderedAndProject does a
-        per-partition top-k then a driver merge — no shuffle.
+        Plan: filter(metadata predicate) → project(query vector as ``_q``)
+        → generate(similarity, dropping rows the keep-rule rejects) →
+        TakeOrdered(k). The scoring kernel is prepared once per query kind
+        and reused; a query only binds its vector (normalized on the
+        driver for cosine) as ``_q``, which Catalyst folds into one array
+        literal. Catalyst pushes the compiled metadata predicate to the
+        Parquet scan; each kept row is scored once (``topk_score``);
+        TakeOrderedAndProject does a per-partition top-k then a driver
+        merge — no shuffle.
 
         - ``metric="cosine"`` (default) = true cosine; ``metric="dot"`` =
           reference's raw dot (embeddings.rs:365; SURVEY.md §7.4.2).
@@ -769,28 +804,13 @@ class EmbeddingCollection:
           never sorted (embeddings.rs:373-381; SURVEY.md §7.4.1).
         - ``num_results=0`` → all matches (embeddings.rs:375).
         """
-        qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
-        vec = self._vec()
-        sim = dot(vec, qv) if metric == "dot" else cosine_similarity(vec, qv)
-        out = (
-            self.df.filter(
-                compile_filters(f_where, promoted_columns=self.df.columns)
-            )
-            # no row where the dot>0 keep-rule (embeddings.rs:366) or the
-            # NaN guard drops it (Rust's NaN > 0.0 is FALSE; Spark's total
-            # order would keep NaN AND rank it above +Inf)
-            .select(
-                "id",
-                "document",
-                F.explode(topk_score(sim)).alias("similarity"),
-                "metadata",
-            )
+        vec_col, quantized = self._vec_col()
+        return cosine_topk(
+            self.df, self.embedder.embed_texts([query_string])[0], num_results,
+            vec_col=vec_col, metric=metric, ordered=ordered, quantized=quantized,
+            pred=compile_filters(f_where, promoted_columns=self.df.columns),
+            columns=["id", "document", "similarity", "metadata"],
         )
-        if ordered:
-            out = out.orderBy(F.desc("similarity"), F.asc("id"))
-        if num_results > 0:
-            out = out.limit(num_results)
-        return out
 
     def cosine_query_many(
         self,
@@ -813,17 +833,15 @@ class EmbeddingCollection:
         if metric != "dot":  # normalized here, once, not per row and probe
             qvs = [unit_vector(v) for v in qvs]
         queries = _local_frame(self.spark, qvs, "int")
-        vec = self._vec()
-        sim = dot(vec, "qvec") if metric == "dot" else unit_cosine(vec, "qvec")
+        vec_col, quantized = self._vec_col()
+        kernel = prepared_kernel(
+            "dot" if metric == "dot" else "cosine", vec_col, "qvec", quantized
+        )
         base = self.df.filter(
             compile_filters(f_where, promoted_columns=self.df.columns)
         )
         scored = base.crossJoin(F.broadcast(queries)).select(
-            "qid",
-            "id",
-            "document",
-            F.explode(topk_score(sim)).alias("similarity"),
-            "metadata",
+            "qid", "id", "document", kernel, "metadata"
         )
         w = Window.partitionBy("qid").orderBy(F.desc("similarity"), F.asc("id"))
         return (
@@ -1082,10 +1100,10 @@ class EmbeddingCollection:
         return row["id"]
 
     def nearest_query_df(self, query_string: str, k: int = 1) -> DataFrame:
-        qv = [float(x) for x in self.embedder.embed_texts([query_string])[0]]
-        return (
-            self.df.withColumn("distance", l2_distance(self._vec(), qv))
-            .orderBy(F.asc("distance"), F.asc("id"))
-            .select("id", "document", "distance", "metadata")
-            .limit(k)
+        """Exact k-NN by L2 as (id, document, distance, metadata), built by
+        ``operators.query.nearest_topk``."""
+        vec_col, quantized = self._vec_col()
+        return nearest_topk(
+            self.df, self.embedder.embed_texts([query_string])[0], k, vec_col=vec_col,
+            quantized=quantized, columns=["id", "document", "distance", "metadata"],
         )

@@ -25,6 +25,19 @@ is done on the driver: a literal query is normalized there
 per-query scalar enters the plan (a ``double`` literal outside a lambda is
 inlined into the generated Java, so every new query would compile anew).
 
+Prepared kernels. A query's plan differs from the previous query's only
+in its vector, and building a kernel is most of the client's work: each
+``F.*`` call and Python lambda is a Py4J round trip, ~20 ms per cosine
+kernel. So ``prepared_kernel`` builds each query kind's scoring column once
+(per metric, vector column and query-vector column) over a query-vector
+COLUMN, ``_q`` (``QUERY_COL``), and hands the same ``Column`` to every
+request. A request binds its vector by projecting ``literal_vector(q)`` as
+``_q`` below the kernel (``operators/query.py``); CollapseProject and
+ConstantFolding then inline it, so the optimized plan holds one array
+literal, exactly as if the kernel had been built around it.
+``cosine_query_many`` scores against the ``qvec`` column of its probe table
+with the same kernels.
+
 Accumulation is double-precision left-fold regardless of input element
 type, matching DuckDB's list_dot_product closely enough that results agree
 to ~1e-12 (the correctness harness rounds to 4 decimals).
@@ -36,8 +49,12 @@ import json
 import math
 from typing import Sequence
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# the column a prepared kernel reads its query vector from
+QUERY_COL = "_q"
 
 
 def literal_vector(values: Sequence[float]) -> Column:
@@ -273,3 +290,40 @@ def dequantize_embedding(qs: Column | str) -> Column:
     return F.transform(
         qs["q"], lambda x: (x.cast("double") * qs["scale"]).cast("float")
     )
+
+
+# (JVM gateway, {kernel key: Column}): a Column holds references into the
+# JVM it was built in, so a new gateway starts an empty cache
+_prepared: tuple[object, dict] = (None, {})
+
+
+def prepared_kernel(
+    metric: str,
+    vec_col: str = "embedding",
+    query_col: str = QUERY_COL,
+    quantized: bool = False,
+    keep_positive_only: bool = True,
+) -> Column:
+    """The scoring column of one query kind, built once and then reused.
+
+    ``metric="cosine"`` scores ``vec_col`` against the unit vectors
+    (``unit_vector``) in ``query_col``, ``"dot"`` against raw vectors;
+    both give ``similarity`` through ``F.explode(topk_score(...))``, so a
+    row the keep-rule rejects vanishes. ``metric="l2"`` gives
+    ``distance``. ``quantized``: ``vec_col`` holds ``quantize_embedding``
+    structs, dequantized in the kernel."""
+    global _prepared
+    gateway = SparkContext._gateway
+    if _prepared[0] is not gateway:
+        _prepared = (gateway, {})
+    key = (metric, vec_col, query_col, quantized, keep_positive_only)
+    kernel = _prepared[1].get(key)
+    if kernel is None:
+        vec = dequantize_embedding(vec_col) if quantized else F.col(vec_col)
+        if metric == "l2":
+            kernel = l2_distance(vec, query_col).alias("distance")
+        else:
+            score = dot(vec, query_col) if metric == "dot" else unit_cosine(vec, query_col)
+            kernel = F.explode(topk_score(score, keep_positive_only)).alias("similarity")
+        _prepared[1][key] = kernel
+    return kernel
